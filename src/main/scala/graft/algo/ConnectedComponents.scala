@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.{DenseId, GraphOps}
+import graft.core.{DenseId, GraphOps, Materialize}
 import graft.iterate.{IterConfig, IterationDriver}
 
 /** Connected components via iterative min-label propagation ("hash-min"),
@@ -158,9 +158,9 @@ object ConnectedComponents {
     // hash-partitioned by src once: every sweep's frontier join is
     // src-keyed, so the cached edge table never reshuffles inside the loop
     // (only the node-sized frontier and proposal tables move)
-    val sym = GraphOps.symmetrize(edges.where(col("src") =!= col("dst")))
-      .select("src", "dst").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = Materialize.cacheForLoop(spark,
+      GraphOps.symmetrize(edges.where(col("src") =!= col("dst")))
+        .select("src", "dst").repartition(col("src")))
     val nodes = GraphOps.nodes(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val hashBuild = nodes.count() / math.max(parts, 1) <=

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.GraphOps
+import graft.core.{GraphOps, Materialize}
 import graft.iterate.{IterConfig, IterationDriver}
 
 /** PLP — label propagation community detection, matching the reference's
@@ -67,9 +67,8 @@ object PLP {
     // the cached edge table is never reshuffled inside the loop (the cache
     // preserves outputPartitioning; only node-sized tables move per sweep,
     // plus the one src-keyed label join over the active half)
-    val sym = GraphOps.symmetrize(edges)
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = Materialize.cacheForLoop(spark,
+      GraphOps.symmetrize(edges).repartition(col("dst")))
     val nodes = GraphOps.nodes(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val n = nodes.count()
     val threshold: Double =

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The one sanctioned way to materialize iteration state: eager
   * localCheckpoint (flat `LogicalRDD` plan, data pinned in the block
@@ -25,6 +26,18 @@ object Materialize {
   def checkpointLazy(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.StatsReset.stripOriginStats(
       df.localCheckpoint(false))
+
+  /** Persist a loop-invariant table and materialize it now, planned with
+    * AQE off like the loops that read it. A cache planned adaptively
+    * reports `UnknownPartitioning`, so a loop joining it on the key it was
+    * partitioned by would re-hash all of it every iteration.
+    */
+  def cacheForLoop(spark: SparkSession, df: DataFrame): DataFrame =
+    Sessions.withoutAqe(spark) {
+      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+      cached.count()
+      cached
+    }
 
   /** Free the block-manager copy behind a checkpointed DataFrame. */
   def free(df: DataFrame): Unit =

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session tuning shared by every entry point. Two settings are
+/** Session tuning shared by every entry point. Three settings are
   * load-bearing for iterative graph plans:
   *
   *  - `spark.sql.defaultSizeInBytes`: Spark's default for leaves with
@@ -17,14 +17,62 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.maxPlanStringLength`: plan-string generation is invoked by
   *    listeners even with the UI off; bounded so deep iterative plans don't
   *    pay quadratic stringification.
+  *  - `spark.sql.codegen.cache.maxEntries` (static, so it can only be set
+  *    when the session is built — see [[builder]]): the JVM-wide LRU of
+  *    janino-compiled generated classes. Spark's default is 100 entries, but
+  *    one pass of the engine's loops generates more distinct classes than
+  *    that: measured with perfbench on local[4], 174–180 classes per
+  *    crawl→PageRank pass and 247–262 per CC + PLP + triangles pass. The
+  *    LRU then hits 0% in steady state, so every pass recompiles every
+  *    class (1.2–2.7 s of janino), HotSpot re-JITs them and the task
+  *    threads run cold code: about a third of a pass's process CPU. 2000 is
+  *    more than 4x the largest measured set, because Guava's segmented
+  *    cache can evict before its nominal maximum. `CodegenCacheSpec` guards
+  *    it: a repeated bounded CC + PLP + PageRank run compiles no new class.
   */
 object Sessions {
+
+  val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries = 2000
+  /** Largest measured per-pass set of generated classes (see above). */
+  val CodegenWorkingSet = 262
+
+  /** Static confs every session graft builds carries. */
+  private val staticConfs: Seq[(String, String)] = Seq(
+    CodegenCacheConf -> CodegenCacheEntries.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** A session builder on `master` carrying graft's static confs. Build
+    * every session from here: static confs cannot be set later.
+    */
+  def builder(master: String, shufflePartitions: String): SparkSession.Builder =
+    staticConfs.foldLeft(SparkSession.builder().master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.maxPlanStringLength", "65536")
     spark.conf.set("spark.sql.defaultSizeInBytes", (50L * 1024 * 1024).toString)
+    undersizedCodegenCache(spark.conf.get(CodegenCacheConf).toInt)
+      .foreach(msg => if (codegenWarned.compareAndSet(false, true))
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(msg))
     spark
   }
+
+  private val codegenWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** The warning for a session built elsewhere (e.g. by a driver calling
+    * `SparkEntry`) whose codegen cache is smaller than graft's: `tune`
+    * cannot raise a static conf, so it logs this once per JVM.
+    */
+  def undersizedCodegenCache(entries: Int): Option[String] =
+    if (entries >= CodegenCacheEntries) None
+    else Some(s"$CodegenCacheConf=$entries is below graft's " +
+      s"$CodegenCacheEntries: one pass of graft's loops generates about " +
+      s"$CodegenWorkingSet classes, so a smaller cache recompiles and " +
+      s"re-JITs them on every pass. Set it when building the session.")
 
   /** Run `f` with AQE disabled, restoring the previous setting after.
     *
@@ -55,18 +103,14 @@ object Sessions {
 
   /** Standard local session for CLI/bench entry points. */
   def build(cpus: String, appName: String = "graft"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+    val s = builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"), cpus)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
       // AQE on by default (skew-join + runtime coalescing at scale); the
       // env override exists because AQE's per-stage driver re-planning is
       // measurable fixed overhead in tight iterative loops — ScalingBench
       // uses it to report the loop's parallel fraction honestly.
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // The IterationDriver intentionally unpersists superseded localCheckpoint

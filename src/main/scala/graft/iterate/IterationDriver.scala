@@ -197,10 +197,19 @@ object IterationDriver {
     * a flat `LogicalRDD` immediately; the data materializes and caches when
     * the enclosing job first computes through it — the kcore
     * sweep-unrolling mechanism), eagerly checkpoints only the LAST hop (the
-    * group's one chain job; every intermediate hop has exactly one consumer
-    * stage inside it, so nothing is computed twice), then reads all k
-    * convergence scalars from the cached states in one cheap second action:
-    * k materializations + k metrics ride two job submissions instead of 2k.
+    * group's one chain job), then reads all k convergence scalars from the
+    * cached states in one cheap second action: k materializations + k
+    * metrics ride two job submissions instead of 2k.
+    *
+    * Requirement on `step`: the stages of the chain job that read a hop
+    * must depend on each other in sequence. The lazy checkpoint caches a
+    * hop only when its first reader finishes computing it; stages that read
+    * the same hop concurrently each compute it themselves, so the hop and
+    * everything upstream of it in the job is recomputed once per concurrent
+    * consumer. Values stay exact, only the work grows. Known violator:
+    * `PLP`, whose step reads the previous hop from three concurrent map
+    * stages, so one chain job runs the map stage over its cached `sym`
+    * edge table several times.
     *
     * Exactness is preserved hop-for-hop: each hop's values are identical to
     * the un-unrolled loop (lazy checkpoint changes scheduling, not data),
@@ -252,10 +261,10 @@ object IterationDriver {
       var s = state
       for (j <- 1 to k) {
         // intermediate hops: LAZY checkpoint (plan truncates now, data
-        // caches when the chain job computes through them — each has
-        // exactly ONE consumer stage inside that job, so nothing is
-        // computed twice); final hop: EAGER — its materialization is the
-        // one chain job of the group.
+        // caches when the chain job first computes through them; concurrent
+        // consumer stages each recompute the hop — see the scaladoc);
+        // final hop: EAGER — its materialization is the one chain job of
+        // the group.
         val hop = step(s, iter + j)
         s =
           if (j < k) hop.transform(graft.core.Materialize.checkpointLazy)

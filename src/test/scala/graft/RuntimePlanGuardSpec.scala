@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -21,6 +24,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    engine's sanctioned global windows all carry ≤ #partitions or
   *    #timestep rows, while a node- or edge-scale single-task window on the
   *    20k-node fixture trips the threshold immediately.
+  *
+  * A second test watches the bounded PageRank, PLP and CC runs for a loop
+  * body that re-hashes its loop-invariant edge cache: a shuffle exchange
+  * that reads a cached table through only narrow operators (filter,
+  * project, codegen wrappers). Each of the three partitions its edge cache
+  * on the loop's join key once, before the loop, so such an exchange means
+  * the cache lost its partitioning.
   */
 class RuntimePlanGuardSpec extends SparkTestBase {
 
@@ -39,46 +49,65 @@ class RuntimePlanGuardSpec extends SparkTestBase {
     p.metrics.get("numOutputRows").map(_.value)
       .getOrElse(p.children.headOption.map(outputRows).getOrElse(0L))
 
-  private val maxGlobalWindowRows = 1000L
-  private val maxScalarJoinRows = 64L
+  /** The cached table `p` reads through narrow operators only, if any. */
+  private def narrowCacheScan(p: SparkPlan): Option[InMemoryTableScanExec] =
+    p match {
+      case s: InMemoryTableScanExec => Some(s)
+      case _: FilterExec | _: ProjectExec | _: WholeStageCodegenExec |
+           _: InputAdapter | _: ColumnarToRowExec =>
+        narrowCacheScan(p.children.head)
+      case _ => None
+    }
 
-  test("iterative bodies: no cartesian joins, no unbounded global windows") {
+  /** Registers `check` on every executed plan while `body` runs. */
+  private def watchPlans(check: (String, SparkPlan) => Option[String])(
+      body: => Unit): Seq[String] = {
     val offenders = scala.collection.mutable.Buffer.empty[String]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit = {
-        collectAll(qe.executedPlan).foreach {
-          case j: CartesianProductExec
-              if j.children.exists(outputRows(_) > maxScalarJoinRows) =>
-            offenders.synchronized {
-              offenders += s"CartesianProduct over >$maxScalarJoinRows rows ($funcName)"
-            }
-          case j: BroadcastNestedLoopJoinExec
-              if j.children.exists(outputRows(_) > maxScalarJoinRows) =>
-            offenders.synchronized {
-              offenders += s"BroadcastNestedLoopJoin over >$maxScalarJoinRows rows ($funcName)"
-            }
-          case w: WindowExec if w.partitionSpec.isEmpty &&
-              outputRows(w) > maxGlobalWindowRows =>
-            offenders.synchronized {
-              offenders += s"partition-less WindowExec with ${outputRows(w)} rows ($funcName)"
-            }
-          case _ => ()
+                             durationNs: Long): Unit =
+        collectAll(qe.executedPlan).flatMap(check(funcName, _)).foreach { o =>
+          offenders.synchronized { offenders += o }
         }
-      }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    offenders.synchronized(offenders.distinct.toSeq)
+  }
 
+  private def fixture(): (DataFrame, DataFrame) = {
     val edges = graft.ingest.PageGen
       .edges(spark, 20000L, seed = 11, numPartitions = 4)
       .persist()
     edges.count()
     val nodes = graft.core.GraphOps.nodes(edges).persist()
     nodes.count()
+    (edges, nodes)
+  }
 
-    spark.listenerManager.register(listener)
-    try {
+  private val maxGlobalWindowRows = 1000L
+  private val maxScalarJoinRows = 64L
+
+  test("iterative bodies: no cartesian joins, no unbounded global windows") {
+    val (edges, nodes) = fixture()
+    val offenders = try watchPlans {
+      case (funcName, j: CartesianProductExec)
+          if j.children.exists(outputRows(_) > maxScalarJoinRows) =>
+        Some(s"CartesianProduct over >$maxScalarJoinRows rows ($funcName)")
+      case (funcName, j: BroadcastNestedLoopJoinExec)
+          if j.children.exists(outputRows(_) > maxScalarJoinRows) =>
+        Some(s"BroadcastNestedLoopJoin over >$maxScalarJoinRows rows ($funcName)")
+      case (funcName, w: WindowExec) if w.partitionSpec.isEmpty &&
+          outputRows(w) > maxGlobalWindowRows =>
+        Some(s"partition-less WindowExec with ${outputRows(w)} rows ($funcName)")
+      case _ => None
+    } {
       import graft.algo._
       val s = spark
       import s.implicits._
@@ -104,11 +133,30 @@ class RuntimePlanGuardSpec extends SparkTestBase {
         (0L, 3L, 1.0), (3L, 2L, 3.0))), 0L, 2L)
       Centrality.kPath(spark, edges, k = 3, samples = 64).count()
     } finally {
-      org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-      spark.listenerManager.unregister(listener)
       edges.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
     }
-    assert(offenders.isEmpty, offenders.distinct.mkString("\n"))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("loop bodies never re-hash their cached edge tables") {
+    val (edges, nodes) = fixture()
+    val offenders = try watchPlans {
+      case (funcName, x: ShuffleExchangeExec) =>
+        narrowCacheScan(x.child).map(scan =>
+          s"${x.outputPartitioning} re-hashes cached " +
+            s"${scan.output.map(_.name).mkString("[", ",", "]")} ($funcName)")
+      case _ => None
+    } {
+      import graft.algo._
+      PageRank.run(spark, edges, nodes, PageRank.Config(tol = 0.0, maxIter = 2))
+        .scores.agg(sum("score")).head()
+      PLP.run(spark, edges, cfg = PLP.Config(maxIter = 2)).labels.count()
+      ConnectedComponents.run(spark, edges).count()
+    } finally {
+      edges.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

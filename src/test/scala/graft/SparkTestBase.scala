@@ -6,14 +6,9 @@ import org.scalatest.BeforeAndAfterAll
 
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.core.Sessions.builder("local[4]", "4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", "65536")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     graft.core.Sessions.tune(s)
