@@ -161,7 +161,8 @@ object ConnectedComponents {
     val sym = Materialize.cacheForLoop(spark,
       GraphOps.symmetrize(edges.where(col("src") =!= col("dst")))
         .select("src", "dst").repartition(col("src")))
-    val nodes = GraphOps.nodes(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    // id-partitioned, so the first level's init state needs no re-hash
+    val nodes = Materialize.checkpointForLoop(spark, GraphOps.nodes(edges))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val hashBuild = nodes.count() / math.max(parts, 1) <=
       GraphOps.hashBuildMaxSliceRows
@@ -171,7 +172,7 @@ object ConnectedComponents {
     val numbered = DenseId.assign(comps, "component", Seq("label"))
     val out = labels.join(numbered, Seq("label"))
       .select(col("id"), col("component"))
-    sym.unpersist(); nodes.unpersist()
+    sym.unpersist(); Materialize.free(nodes)
     out
   }
 

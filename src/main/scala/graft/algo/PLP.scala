@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.core.{GraphOps, Materialize}
 import graft.iterate.{IterConfig, IterationDriver}
 
@@ -17,7 +16,12 @@ import graft.iterate.{IterConfig, IterationDriver}
   *    **smallest** label (:89-92 — std::map iteration order + max_element
   *    keeping the first maximum)
   *  - nodes that changed re-activate their neighbors; unchanged active
-  *    nodes deactivate (:94-102)
+  *    nodes deactivate (:94-102). Under the red-black schedule below this
+  *    unrolls to a rule on the state's two change flags: a node of sweep
+  *    t's parity updates iff it changed in its own last sweep (t-2) or a
+  *    neighbor changed in sweep t-1 or t-2. The state is
+  *    `(id, label, changed, prev_changed)`, the flags of sweeps t-1 and t-2;
+  *    init sets both, so the first two sweeps update every node.
   *  - stop when `#updated ≤ updateThreshold` (default `n/1e5`, :41-43) or
   *    `maxIterations`
   *  - isolated nodes keep their singleton label (:50-61)
@@ -62,26 +66,26 @@ object PLP {
   def run(spark: SparkSession, edges: DataFrame,
           baseClustering: Option[DataFrame] = None,
           cfg: Config = Config()): Result = {
-    // hash-partitioned by dst ONCE: the per-sweep active-set semi-join, the
-    // winner aggregation and the re-activation scan are all dst-keyed, so
-    // the cached edge table is never reshuffled inside the loop (the cache
-    // preserves outputPartitioning; only node-sized tables move per sweep,
-    // plus the one src-keyed label join over the active half)
+    // hash-partitioned by dst ONCE: the per-sweep neighbor-activation and
+    // update-set semi-joins and the winner aggregation are all dst-keyed,
+    // so the cached edge table is never reshuffled inside the loop (the
+    // cache preserves outputPartitioning; only node-sized tables move per
+    // sweep, plus the one src-keyed label join over the update set's edges)
     val sym = Materialize.cacheForLoop(spark,
       GraphOps.symmetrize(edges).repartition(col("dst")))
-    val nodes = GraphOps.nodes(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    // id-partitioned like every loop state, so the init state needs no
+    // re-hash in the first sweep
+    val nodes = Materialize.checkpointForLoop(spark, GraphOps.nodes(edges))
     val n = nodes.count()
     val threshold: Double =
       if (cfg.updateThreshold >= 0) cfg.updateThreshold.toDouble
       else math.max(1.0, n / 1e5)
 
-    val init = baseClustering match {
+    val init = (baseClustering match {
       case Some(base) => nodes.join(base, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("label"),
-          lit(true).as("active"))
-      case None => nodes.select(col("id"), col("id").as("label"),
-        lit(true).as("active"))
-    }
+        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+      case None => nodes.select(col("id"), col("id").as("label"))
+    }).withColumn("changed", lit(true)).withColumn("prev_changed", lit(true))
 
     // node-sized sides hinted shuffle-hash when the per-partition build
     // slice is cache-friendly (GraphOps.hashBuildHint): all loop joins are
@@ -90,58 +94,46 @@ object PLP {
     def buildSide(df: DataFrame): DataFrame =
       GraphOps.hashBuildHint(df, n, parts)
 
+    // The step reads only its input state, which is materialized, and
+    // references the vote once: its output is the next state and nothing
+    // else, so each sweep's plan runs the vote once.
     def step(state: DataFrame, iter: Int): DataFrame = {
-      val labelsOnly = state.select("id", "label")
-      // red-black schedule: this sweep's update set is the active nodes of
-      // the current parity class; the other class keeps its labels.
+      // red-black schedule: this sweep updates nodes of its parity class;
+      // the other class keeps its labels.
       val parity = iter % 2
-      val updateSet = state.where(col("active") && pmod(col("id"), lit(2)) === parity)
+      def ofParity(c: String) = pmod(col(c), lit(2)) === parity
+      // nodes of this parity next to a node flagged in the last two sweeps.
+      // sym is symmetric, so they are the srcs of edges whose dst is
+      // flagged: the semi-join stays on the cached dst-partitioning.
+      val flagged = state.where(col("changed") || col("prev_changed"))
+        .select(col("id").as("dst"))
+      val nearFlagged = sym.where(ofParity("src"))
+        .join(buildSide(flagged), Seq("dst"), "left_semi")
+        .select(col("src").as("id")).distinct()
+        .withColumn("near_flagged", lit(true))
+      val updateSet = state.where(ofParity("id"))
+        .join(buildSide(nearFlagged), Seq("id"), "left")
+        .where(col("prev_changed") || col("near_flagged").isNotNull)
+        .select(col("id").as("dst"))
       // neighbor labels arriving at each updating node. The parity filter
-      // (a static scan predicate) and the active-set semi-join are applied
+      // (a static scan predicate) and the update-set semi-join are applied
       // to the edge table BEFORE the label join, so the big edges⋈labels
-      // shuffle only carries rows whose dst actually updates this sweep —
-      // at minimum half the edges, and a shrinking fraction as the active
-      // set drains (previously the full join ran first and the semi-join
-      // discarded most of it afterwards).
-      val nbr = sym
-        .where(pmod(col("dst"), lit(2)) === parity)
-        .join(buildSide(updateSet.select(col("id").as("dst"))),
-          Seq("dst"), "left_semi")
-        .join(buildSide(labelsOnly.withColumnRenamed("id", "src")
-          .withColumnRenamed("label", "nlabel")), "src")
+      // shuffle only carries rows whose dst actually updates this sweep.
+      val nbr = sym.where(ofParity("dst"))
+        .join(buildSide(updateSet), Seq("dst"), "left_semi")
+        .join(buildSide(state.select(col("id").as("src"),
+          col("label").as("nlabel"))), "src")
       val winners = nbr
         .groupBy(col("dst"), col("nlabel"))
         .agg(sum("weight").as("w"))
         .groupBy(col("dst").as("id"))
         .agg(max_by(col("nlabel"),
           struct(col("w"), (-col("nlabel")).as("nl"))).as("winner"))
-      val updated = state.join(buildSide(winners), Seq("id"), "left")
-        .select(col("id"), col("active"),
-          when(col("winner").isNotNull, col("winner"))
-            .otherwise(col("label")).as("label"),
-          (col("winner").isNotNull && col("winner") =!= col("label")).as("changed"),
-          col("changed").as("prev_changed"),
-          // this node was eligible this sweep → deactivate unless re-activated
-          (pmod(col("id"), lit(2)) === parity).as("swept"))
-      // re-activate changed nodes and their neighbors; deactivate swept
-      // unchanged nodes; the off-parity class keeps its activation.
-      val changedIds = updated.where(col("changed")).select(col("id"))
-      // neighbors-of-changed via the dst side (sym is symmetric, so
-      // {src : dst ∈ changed} IS the neighbor set): stays on the cached
-      // dst-partitioning — no edge shuffle — and the parity filter applies
-      // because every changed node carries this sweep's parity
-      val nbrOfChanged = sym
-        .where(pmod(col("dst"), lit(2)) === parity)
-        .join(buildSide(changedIds.withColumnRenamed("id", "dst")),
-          Seq("dst"), "left_semi")
-        .select(col("src").as("id")).distinct()
-      val activeNext = changedIds.unionByName(nbrOfChanged).distinct()
-        .withColumn("nextActive", lit(true))
-      updated.join(activeNext, Seq("id"), "left")
-        .select(col("id"), col("label"),
-          (coalesce(col("nextActive"), lit(false)) ||
-            (col("active") && !col("swept"))).as("active"),
-          col("changed"), col("prev_changed"))
+      state.join(buildSide(winners), Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("winner"), col("label")).as("label"),
+          coalesce(col("winner") =!= col("label"), lit(false)).as("changed"),
+          col("changed").as("prev_changed"))
     }
 
     // a full round = red + black sweep; stop when the round's total updates
@@ -154,14 +146,12 @@ object PLP {
       next.agg(sum(when(col("changed") || col("prev_changed"), 1L)
         .otherwise(0L)).as("m"))
 
-    val res = IterationDriver.runFused(spark,
-      init.withColumn("changed", lit(true)).withColumn("prev_changed", lit(true)),
-      step, updatedAgg,
+    val res = IterationDriver.runFused(spark, init, step, updatedAgg,
       IterConfig(tol = threshold, maxIter = cfg.maxIter,
         checkpointDir = cfg.checkpointDir),
       unroll = PLP.defaultUnroll)
 
-    sym.unpersist(); nodes.unpersist()
+    sym.unpersist(); Materialize.free(nodes)
     Result(res.state.select("id", "label"), res.iterations, res.history)
   }
 }

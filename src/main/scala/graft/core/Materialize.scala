@@ -14,7 +14,7 @@ object Materialize {
 
   def checkpoint(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.StatsReset.stripOriginStats(
-      df.localCheckpoint(true))
+      df, df.localCheckpoint(true))
 
   /** Lazy variant: truncates the logical plan to a flat `LogicalRDD` NOW
     * (so composing k hops inside one job keeps per-hop planning O(1)
@@ -25,7 +25,7 @@ object Materialize {
     */
   def checkpointLazy(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftshim.StatsReset.stripOriginStats(
-      df.localCheckpoint(false))
+      df, df.localCheckpoint(false))
 
   /** Persist a loop-invariant table and materialize it now, planned with
     * AQE off like the loops that read it. A cache planned adaptively
@@ -38,6 +38,16 @@ object Materialize {
       cached.count()
       cached
     }
+
+  /** Eager checkpoint of a loop-invariant table, planned with AQE off like
+    * the loops that read it, so it keeps its partitioning. For tables a
+    * caller may have persisted under the same plan (`GraphOps.nodes` of the
+    * caller's edges): `cacheForLoop` would share the caller's cache entry,
+    * with the caller's planning, and unpersisting it would drop the
+    * caller's cache; `free` drops only this copy.
+    */
+  def checkpointForLoop(spark: SparkSession, df: DataFrame): DataFrame =
+    Sessions.withoutAqe(spark)(checkpoint(df))
 
   /** Free the block-manager copy behind a checkpointed DataFrame. */
   def free(df: DataFrame): Unit =

@@ -13,6 +13,12 @@ import scala.jdk.CollectionConverters._
 final case class IterRecord(iter: Int, metric: Double, wallMs: Long,
                             rows: Long, snapshot: String)
 
+/** A checkpoint manifest with an invalid record before valid ones: not a
+  * write torn by a kill, which can only hit the last line.
+  */
+final class CorruptManifestException(msg: String)
+    extends IllegalStateException(msg)
+
 final case class IterConfig(
     tol: Double,
     maxIter: Int,
@@ -71,20 +77,70 @@ object IterationDriver {
 
   private def manifestPath(dir: String) = Paths.get(dir, "manifest.jsonl")
 
+  private val manifestFields = Seq("iter", "metric", "wall_ms", "rows", "snapshot")
+
+  /** One manifest line as written by `appendManifest`, or None when it is
+    * not a complete record: a field missing, unparsable, or no closing
+    * brace (a write torn by a kill).
+    */
+  private def parseRecord(line: String): Option[IterRecord] = {
+    // minimal fixed-shape JSON parse (we wrote it)
+    def field(name: String): Option[String] = {
+      val key = "\"" + name + "\":"
+      val i = line.indexOf(key)
+      if (i < 0) None
+      else {
+        val rest = line.substring(i + key.length)
+        if (rest.startsWith("\"")) {
+          val end = rest.indexOf('"', 1)
+          if (end < 0) None else Some(rest.substring(1, end))
+        } else {
+          val v = rest.takeWhile(c => c != ',' && c != '}')
+          if (v.length == rest.length) None else Some(v)
+        }
+      }
+    }
+    if (!line.trim.endsWith("}")) None
+    else manifestFields.map(field) match {
+      case Seq(Some(i), Some(m), Some(w), Some(r), Some(snap)) =>
+        scala.util.Try(IterRecord(i.toInt, m.toDouble, w.toLong, r.toLong, snap))
+          .toOption
+      case _ => None
+    }
+  }
+
+  /** The manifest's records. A torn last line — the run was killed while
+    * appending it — is skipped, so a resume starts from the last complete
+    * record; an invalid line followed by valid ones is corruption and
+    * throws [[CorruptManifestException]].
+    */
   def readManifest(dir: String): Vector[IterRecord] = {
     val p = manifestPath(dir)
     if (!Files.exists(p)) Vector.empty
-    else Files.readAllLines(p).asScala.toVector.filter(_.nonEmpty).map { line =>
-      // minimal fixed-shape JSON parse (we wrote it)
-      def field(name: String): String = {
-        val i = line.indexOf("\"" + name + "\":")
-        val start = i + name.length + 3
-        val rest = line.substring(start)
-        if (rest.startsWith("\"")) rest.substring(1, rest.indexOf('"', 1))
-        else rest.takeWhile(c => c != ',' && c != '}')
+    else {
+      val lines = Files.readAllLines(p).asScala.toVector.filter(_.nonEmpty)
+      val recs = lines.map(parseRecord)
+      recs.indexWhere(_.isEmpty) match {
+        case -1 => recs.flatten
+        case i if i == recs.length - 1 => recs.init.flatten
+        case i => throw new CorruptManifestException(
+          s"$p: line ${i + 1} of ${recs.length} is not a complete record " +
+            s"but later lines are: '${lines(i).take(200)}'")
       }
-      IterRecord(field("iter").toInt, field("metric").toDouble,
-        field("wall_ms").toLong, field("rows").toLong, field("snapshot"))
+    }
+  }
+
+  /** Rewrites the manifest without a torn last line, so the records a
+    * resumed run appends are not glued onto it.
+    */
+  private def dropTornTail(dir: String): Unit = {
+    val p = manifestPath(dir)
+    if (Files.exists(p)) {
+      val lines = Files.readAllLines(p).asScala.toVector.filter(_.nonEmpty)
+      val recs = readManifest(dir)
+      if (recs.length < lines.length)
+        Files.write(p, lines.take(recs.length).map(_ + "\n").mkString
+          .getBytes("UTF-8"))
     }
   }
 
@@ -95,21 +151,15 @@ object IterationDriver {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  /** Latest complete snapshot in `dir`, if any. */
+  /** Latest complete snapshot in `dir`, if any. A torn last manifest line
+    * is cut from the file first, so the resumed run's records follow the
+    * last complete one.
+    */
   def latestSnapshot(spark: SparkSession, dir: String): Option[(Int, DataFrame)] = {
+    dropTornTail(dir)
     val recs = readManifest(dir).filter(_.snapshot.nonEmpty)
     recs.lastOption.map(r => (r.iter, spark.read.parquet(r.snapshot)))
   }
-
-  /** Free the block-manager copy behind an eagerly localCheckpoint'ed
-    * DataFrame (its logical plan is a LogicalRDD over a cached RDD).
-    */
-  private def freeCheckpointed(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Run the loop. `step(state, iter)` produces the next state; `metric`
     * compares consecutive states (an action). Convergence when
@@ -166,11 +216,11 @@ object IterationDriver {
         val dir = cfg.checkpointDir.get
         snapshot = s"$dir/state/iter=${"%05d".format(iter)}"
         next.write.mode("overwrite").parquet(snapshot)
-        freeCheckpointed(next)
+        graft.core.Materialize.free(next)
         // reload: resume-from-disk ≡ continue-in-memory, bit-identical
         next = spark.read.parquet(snapshot).transform(graft.core.Materialize.checkpoint)
       }
-      freeCheckpointed(state)
+      graft.core.Materialize.free(state)
       val wallMs = (System.nanoTime() - t0) / 1000000
       val rec = IterRecord(iter, m, wallMs, rows, snapshot)
       history :+= rec
@@ -201,15 +251,16 @@ object IterationDriver {
     * cached states in one cheap second action: k materializations + k
     * metrics ride two job submissions instead of 2k.
     *
-    * Requirement on `step`: the stages of the chain job that read a hop
-    * must depend on each other in sequence. The lazy checkpoint caches a
-    * hop only when its first reader finishes computing it; stages that read
-    * the same hop concurrently each compute it themselves, so the hop and
-    * everything upstream of it in the job is recomputed once per concurrent
-    * consumer. Values stay exact, only the work grows. Known violator:
-    * `PLP`, whose step reads the previous hop from three concurrent map
-    * stages, so one chain job runs the map stage over its cached `sym`
-    * edge table several times.
+    * Requirement on `step`: the plan it returns should contain each
+    * intermediate result once. Several stages may read the same hop: the
+    * stages upstream of a hop belong to its one lineage and run once, and a
+    * reader that reaches a hop partition while another computes it waits
+    * on Spark's per-block write lock and then reads the cached block. What
+    * repeats work is a sub-plan that appears several times in the step's
+    * plan (one DataFrame referenced from several branches): each copy
+    * plans to stages of its own and runs in full. Values stay exact, only
+    * the work grows (BASELINE.md has the stage listing of a PLP step that
+    * referenced its vote three times).
     *
     * Exactness is preserved hop-for-hop: each hop's values are identical to
     * the un-unrolled loop (lazy checkpoint changes scheduling, not data),
@@ -261,8 +312,7 @@ object IterationDriver {
       var s = state
       for (j <- 1 to k) {
         // intermediate hops: LAZY checkpoint (plan truncates now, data
-        // caches when the chain job first computes through them; concurrent
-        // consumer stages each recompute the hop — see the scaladoc);
+        // caches when the chain job first computes through them);
         // final hop: EAGER — its materialization is the one chain job of
         // the group.
         val hop = step(s, iter + j)
@@ -310,7 +360,7 @@ object IterationDriver {
         next = spark.read.parquet(snapshot).transform(graft.core.Materialize.checkpoint)
       }
       for (j <- 0 until used - 1) graft.core.Materialize.free(hops(j))
-      freeCheckpointed(state)
+      graft.core.Materialize.free(state)
       val groupWall = (System.nanoTime() - t0) / 1000000
       for (j <- 0 until used) {
         // per-hop walls are the amortized group wall; the integer-division

@@ -3,12 +3,15 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.algo.PageRank
 import graft.core.GraphOps
-import graft.iterate.IterationDriver
+import graft.iterate.{CorruptManifestException, IterationDriver}
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Contract tests for `IterationDriver.runFused` (the unrolled chain-job
   * loop): hop-for-hop parity with the plain loop — identical score
   * trajectories, identical detected convergence iteration, interchangeable
-  * disk-checkpoint manifests, and resume across loop flavors.
+  * disk-checkpoint manifests, and resume across loop flavors — also from
+  * a manifest whose last line a kill tore.
   */
 class FusedLoopSpec extends SparkTestBase {
 
@@ -77,5 +80,49 @@ class FusedLoopSpec extends SparkTestBase {
     val a = resumed.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val b = clean.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(a == b)
+  }
+
+  test("a torn last manifest line is skipped: resume from the last complete record") {
+    val df = edgesDF
+    val nodes = GraphOps.nodes(df)
+    val dir = Files.createTempDirectory("fused_torn").toString
+    PageRank.run(spark, df, nodes,
+      PageRank.Config(tol = 1e-10, maxIter = 6, checkpointDir = Some(dir),
+        checkpointEvery = 2, unroll = 1))
+    // a kill while appending record 6 leaves `{"iter":6,"met`
+    val manifest = Paths.get(dir, "manifest.jsonl")
+    val lines = Files.readAllLines(manifest).asScala.toVector
+    val torn = lines.last.take(lines.last.indexOf("\"metric\"") + 5)
+    Files.write(manifest, (lines.init.map(_ + "\n").mkString + torn).getBytes("UTF-8"))
+    assert(IterationDriver.readManifest(dir).map(_.iter) == (1 to 5))
+
+    val resumed = PageRank.run(spark, df, nodes,
+      PageRank.Config(tol = 1e-10, checkpointDir = Some(dir),
+        checkpointEvery = 2, unroll = 1))
+    assert(resumed.resumedFrom == 4) // the last snapshot before the torn record
+    val clean = PageRank.run(spark, df, nodes,
+      PageRank.Config(tol = 1e-10, unroll = 1))
+    assert(resumed.resumedFrom + resumed.iterations == clean.iterations)
+    val a = resumed.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val b = clean.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(a == b)
+    // the torn line was cut, not glued to the resumed run's first record
+    assert(IterationDriver.readManifest(dir).last.iter == clean.iterations)
+  }
+
+  test("an invalid manifest record followed by valid ones is a typed error") {
+    val dir = Files.createTempDirectory("fused_corrupt")
+    def rec(i: Int) =
+      s"""{"iter":$i,"metric":0.5,"wall_ms":3,"rows":-1,"snapshot":""}"""
+    Files.write(dir.resolve("manifest.jsonl"),
+      Seq(rec(1), """{"iter":2,"met""", rec(3)).map(_ + "\n").mkString
+        .getBytes("UTF-8"))
+    val e = intercept[CorruptManifestException](
+      IterationDriver.readManifest(dir.toString))
+    assert(e.getMessage.contains("line 2 of 3"))
+    // a torn LAST line alone is not corruption
+    Files.write(dir.resolve("manifest.jsonl"),
+      (rec(1) + "\n" + """{"iter":2,"met""").getBytes("UTF-8"))
+    assert(IterationDriver.readManifest(dir.toString).map(_.iter) == Seq(1))
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, MaxBy}
+import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -31,6 +34,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * project, codegen wrappers). Each of the three partitions its edge cache
   * on the loop's join key once, before the loop, so such an exchange means
   * the cache lost its partitioning.
+  *
+  * The remaining tests pin plan shapes: each PLP sweep runs its label vote
+  * once, a checkpoint keeps the partitioning of an aliased key, and
+  * PageRank's and DenseId's executed plans keep their exchange counts.
   */
 class RuntimePlanGuardSpec extends SparkTestBase {
 
@@ -59,16 +66,13 @@ class RuntimePlanGuardSpec extends SparkTestBase {
       case _ => None
     }
 
-  /** Registers `check` on every executed plan while `body` runs. */
-  private def watchPlans(check: (String, SparkPlan) => Option[String])(
-      body: => Unit): Seq[String] = {
-    val offenders = scala.collection.mutable.Buffer.empty[String]
+  /** Every executed plan, with its action's name, of the queries `body` runs. */
+  private def executedPlans(body: => Unit): Seq[(String, SparkPlan)] = {
+    val plans = scala.collection.mutable.Buffer.empty[(String, SparkPlan)]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit =
-        collectAll(qe.executedPlan).flatMap(check(funcName, _)).foreach { o =>
-          offenders.synchronized { offenders += o }
-        }
+        plans.synchronized { plans += funcName -> qe.executedPlan }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
@@ -78,8 +82,15 @@ class RuntimePlanGuardSpec extends SparkTestBase {
       org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
       spark.listenerManager.unregister(listener)
     }
-    offenders.synchronized(offenders.distinct.toSeq)
+    plans.synchronized(plans.toSeq)
   }
+
+  /** `check` over every node of every executed plan while `body` runs. */
+  private def watchPlans(check: (String, SparkPlan) => Option[String])(
+      body: => Unit): Seq[String] =
+    executedPlans(body).flatMap { case (funcName, plan) =>
+      collectAll(plan).flatMap(check(funcName, _))
+    }.distinct
 
   private def fixture(): (DataFrame, DataFrame) = {
     val edges = graft.ingest.PageGen
@@ -158,5 +169,66 @@ class RuntimePlanGuardSpec extends SparkTestBase {
       nodes.unpersist(blocking = false)
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("each PLP sweep's plan runs the label vote once") {
+    val (edges, nodes) = fixture()
+    def finalMaxBys(plan: SparkPlan): Int = collectAll(plan).count {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+        e.mode == Final && e.aggregateFunction.isInstanceOf[MaxBy])
+      case _ => false
+    }
+    val perPlan = try executedPlans {
+      graft.algo.PLP.run(spark, edges, cfg = graft.algo.PLP.Config(maxIter = 2))
+        .labels.count()
+    } finally {
+      edges.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+    }
+    // one plan per sweep holds the vote; the metric and output plans read
+    // the checkpointed states
+    val votes = perPlan.map { case (_, p) => finalMaxBys(p) }.filter(_ > 0)
+    assert(votes == Seq(1, 1), votes)
+  }
+
+  test("a checkpoint keeps the partitioning of an aliased key") {
+    val ck = graft.core.Sessions.withoutAqe(spark) {
+      val byId = spark.range(0L, 1000L).toDF("id").repartition(4, col("id"))
+      graft.core.Materialize.checkpoint(
+        byId.select(col("id"), col("id").as("label")))
+    }
+    val plan = graft.core.Sessions.withoutAqe(spark)(ck.queryExecution.executedPlan)
+    val Seq(id, label) = plan.output
+    for (key <- Seq(id, label))
+      assert(plan.outputPartitioning.satisfies(ClusteredDistribution(Seq(key))),
+        s"${plan.outputPartitioning} does not cluster by $key")
+    graft.core.Materialize.free(ck)
+  }
+
+  test("PageRank and DenseId plans keep their exchange counts") {
+    val (edges, nodes) = fixture()
+    def exchanges(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case q: QueryStageExec => exchanges(q.plan)
+      case _ =>
+        val here = if (p.isInstanceOf[ShuffleExchangeExec]) 1 else 0
+        here + (p.children ++ p.subqueries).map(exchanges).sum
+    }
+    def count(body: => Unit): Int =
+      executedPlans(body).map { case (_, p) => exchanges(p) }.sum
+    val (pageRank, denseId) = try {
+      import graft.algo.PageRank
+      (count {
+        PageRank.run(spark, edges, nodes, PageRank.Config(tol = 0.0, maxIter = 2))
+          .scores.agg(sum("score")).head()
+      }, count {
+        graft.core.DenseId.assign(nodes, "dense", Seq("id")).count()
+      })
+    } finally {
+      edges.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+    }
+    // the counts before checkpoints kept aliased partitionings
+    assert((pageRank, denseId) == ((8, 5)))
   }
 }

@@ -83,11 +83,14 @@ object Oracles {
   /** Red-black semi-synchronous PLP with the engine's pinned semantics
     * (weighted majority, min-label tie-break, parity-alternating sweeps,
     * active-set, per-round threshold stop). Mirrors graft.algo.PLP exactly.
+    * Labels start from `base` where it has one, else the node id. Returns
+    * the labels and the number of sweeps run.
     */
   def plp(nodes: Seq[Long], symEdges: Seq[(Long, Long, Double)],
-          threshold: Long, maxIter: Int = 100): Map[Long, Long] = {
+          threshold: Long, maxIter: Int = 100,
+          base: Map[Long, Long] = Map.empty): (Map[Long, Long], Int) = {
     val adj = symEdges.groupBy(_._1)
-    var labels = nodes.map(u => u -> u).toMap
+    var labels = nodes.map(u => u -> base.getOrElse(u, u)).toMap
     var active = nodes.toSet
     var prevChangedCount = nodes.size
     var iter = 0
@@ -113,7 +116,7 @@ object Oracles {
       done = changed.size + prevChangedCount <= threshold
       prevChangedCount = changed.size
     }
-    labels
+    (labels, iter)
   }
 
   /** Brute-force triangle enumeration on the simple undirected graph. */

@@ -152,7 +152,7 @@ class PLPSpec extends SparkTestBase {
     val res = PLP.run(spark, edgeDF(edges))
     val labels = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val sym = edges ++ edges.map { case (u, v, w) => (v, u, w) }
-    val want = Oracles.plp((0L until 10L).toSeq, sym, threshold = 1L)
+    val (want, _) = Oracles.plp((0L until 10L).toSeq, sym, threshold = 1L)
     assert(labels == want)
     assert(labels.values.toSet.size == 2)
   }
@@ -183,8 +183,37 @@ class PLPSpec extends SparkTestBase {
     val sym = und ++ und.map { case (u, v, w) => (v, u, w) }
     val res = PLP.run(spark, edgeDF(und), cfg = PLP.Config(updateThreshold = 0))
     val got = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = Oracles.plp((0L to 5L).toSeq, sym, threshold = 0L)
+    val (want, _) = Oracles.plp((0L to 5L).toSeq, sym, threshold = 0L)
     assert(got == want)
+  }
+
+  /** A ~2,000-node PageGen graph run to convergence against the oracle. */
+  private def convergedMatchesOracle(base: Long => Option[Long]): Unit = {
+    val df = PageGen.edges(spark, 2000, seed = 5, maxOutDeg = 16)
+    val edges = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    val baseMap = nodes.flatMap(u => base(u).map(u -> _)).toMap
+    val s = spark
+    import s.implicits._
+    val baseDF = if (baseMap.isEmpty) None
+                 else Some(baseMap.toSeq.toDF("id", "label"))
+    val res = PLP.run(spark, edgeDF(edges), baseDF)
+    val got = res.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sym = edges ++ edges.collect { case (u, v, w) if u != v => (v, u, w) }
+    val (want, sweeps) = Oracles.plp(nodes, sym, threshold = 1L, base = baseMap)
+    assert(res.iterations == sweeps)
+    assert(got == want)
+    assert(sweeps > 2 && sweeps < 100, s"$sweeps sweeps")
+  }
+
+  test("full convergence on a 2,000-node PageGen graph matches the oracle: labels and sweeps") {
+    convergedMatchesOracle(_ => None)
+  }
+
+  test("full convergence from a base clustering matches the oracle: labels and sweeps") {
+    // every third node starts in one of 40 seed communities; the rest keep
+    // their id (the base table has no row for them)
+    convergedMatchesOracle(u => if (u % 3 == 0) Some(u % 40) else None)
   }
 
   test("isolated nodes keep singleton labels") {
