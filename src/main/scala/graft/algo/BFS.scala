@@ -13,13 +13,6 @@ import graft.iterate.{IterConfig, IterationDriver}
   */
 object SSSP {
 
-  /** Relax-round unroll factor for the fused weighted-SSSP loop;
-    * env-overridable for A/B and plain-loop-fallback debugging
-    * (`SPARK_GRAFT_SSSP_UNROLL=1`), mirroring SPARK_GRAFT_PR_UNROLL.
-    */
-  val defaultUnroll: Int =
-    graft.iterate.IterationDriver.envUnroll("SPARK_GRAFT_SSSP_UNROLL", 4)
-
   /** Multi-source BFS: `sources(id)` → `(source, id, dist)` hop counts for
     * all reachable nodes. One frontier join per level; all sources advance
     * in the same jobs (batching amortizes per-iteration overhead — this is
@@ -112,7 +105,7 @@ object SSSP {
     */
   def weighted(spark: SparkSession, edges: DataFrame, source: Long,
                directed: Boolean = false, maxIter: Int = 1000,
-               unroll: Int = SSSP.defaultUnroll): DataFrame = {
+               unroll: Int = IterationDriver.DefaultUnroll): DataFrame = {
     val adj0 = if (directed) edges else GraphOps.symmetrize(edges)
     val adj = adj0.repartition(col("src")).sortWithinPartitions("src")
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -134,15 +127,15 @@ object SSSP {
           (col("prop").isNotNull && col("prop") < col("dist")).as("changed"))
     }
 
-    // next-only metric → fused unrolled driver (IterationDriver.runFused):
-    // relax rounds compose into one chain job with a single metric read.
-    // Weighted SSSP's worst case is exactly where this pays most — a
-    // high-diameter graph needs one relax round per hop, and the plain
-    // loop's 2 driver round-trips per round are the dominant fixed cost.
+    // next-only metric, so relax rounds compose into one chain job with a
+    // single metric read (IterationDriver.run's unroll). Weighted SSSP's
+    // worst case is exactly where this pays most — a high-diameter graph
+    // needs one relax round per hop, and at unroll = 1 the 2 driver
+    // round-trips per round are the dominant fixed cost.
     def changedAgg(next: DataFrame): DataFrame =
       next.agg(sum(when(col("changed"), 1L).otherwise(0L)).as("m"))
 
-    val res = IterationDriver.runFused(spark, init, step, changedAgg,
+    val res = IterationDriver.run(spark, init, step, changedAgg,
       IterConfig(tol = 0.0, maxIter = maxIter), unroll = unroll)
     adj.unpersist()
     res.state.where(!col("dist").isNaN && col("dist") =!= Double.PositiveInfinity)

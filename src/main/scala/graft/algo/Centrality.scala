@@ -12,14 +12,6 @@ import graft.iterate.{IterConfig, IterationDriver}
   */
 object Centrality {
 
-  /** Iteration-unroll factor for the fused power-iteration loops
-    * (eigenvector, Katz); env-overridable for A/B and plain-loop-fallback
-    * debugging (`SPARK_GRAFT_POWER_UNROLL=1`), mirroring
-    * SPARK_GRAFT_PR_UNROLL.
-    */
-  val powerUnroll: Int =
-    graft.iterate.IterationDriver.envUnroll("SPARK_GRAFT_POWER_UNROLL", 4)
-
   /** Degree centrality (`centrality/DegreeCentrality.cpp`): out-degree per
     * node, optionally normalized by (n-1). Pass the symmetrized view for
     * undirected semantics.
@@ -45,7 +37,7 @@ object Centrality {
     * aggregate equi-joined back on a constant key (a BroadcastHashJoin of a
     * 1-row side, not a cartesian) — and the previous score rides the state,
     * so the whole step is declarative with a next-only metric and the loop
-    * runs through the fused unrolled driver like PageRank. Values are
+    * unrolls in `IterationDriver.run` like PageRank. Values are
     * hop-for-hop identical to the driver-side-norm formulation (same sum
     * expression, same Math.sqrt, same zero-norm guard).
     */
@@ -79,8 +71,8 @@ object Centrality {
     def l2Agg(next: DataFrame): DataFrame =
       next.agg(sqrt(sum(pow(col("score") - col("prev"), 2))).as("m"))
 
-    val res = IterationDriver.runFused(spark, init, step, l2Agg,
-      IterConfig(tol, maxIter), unroll = Centrality.powerUnroll)
+    val res = IterationDriver.run(spark, init, step, l2Agg,
+      IterConfig(tol, maxIter), IterationDriver.DefaultUnroll)
     adj.unpersist()
     res.state.select("id", "score")
   }
@@ -107,8 +99,8 @@ object Centrality {
     }
     def l2Agg(next: DataFrame): DataFrame =
       next.agg(sqrt(sum(pow(col("score") - col("prev"), 2))).as("m"))
-    val res = IterationDriver.runFused(spark, init, step, l2Agg,
-      IterConfig(tol, maxIter), unroll = Centrality.powerUnroll)
+    val res = IterationDriver.run(spark, init, step, l2Agg,
+      IterConfig(tol, maxIter), IterationDriver.DefaultUnroll)
     val norm = math.sqrt(res.state.agg(sum(col("score") * col("score")))
       .head().getDouble(0))
     res.state.select(col("id"), (col("score") / norm).as("score"))
@@ -478,7 +470,7 @@ object Centrality {
         // the final job's doCheckpoint recursion does not reliably reach
         // the marked intermediate RDDs — the metric then reads
         // never-materialized checkpoint blocks (the same reason
-        // IterationDriver.runFused runs AQE-off). The full-cache branch
+        // IterationDriver.run runs AQE-off). The full-cache branch
         // below never reads intermediates back and keeps AQE.
         val states = new scala.collection.mutable.ArrayBuffer[DataFrame](hops)
         val escapes = new scala.collection.mutable.ArrayBuffer[DataFrame](hops)
@@ -515,8 +507,6 @@ object Centrality {
           changed = mByHop(valid - 1)
           sweep += valid
         }
-        hopCaches.foreach(graft.core.Materialize.free)
-        hopCaches.clear()
         if (firstEsc.isDefined) {
           if (verbose) System.err.println(
             s"[kcore] escape at group hop ${firstEsc.get} " +

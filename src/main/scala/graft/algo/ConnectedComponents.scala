@@ -29,13 +29,6 @@ import graft.iterate.{IterConfig, IterationDriver}
   */
 object ConnectedComponents {
 
-  /** Sweep-unroll factor for the fused hash-min loop; env-overridable for
-    * A/B and plain-loop-fallback debugging (`SPARK_GRAFT_CC_UNROLL=1`),
-    * mirroring PageRank's SPARK_GRAFT_PR_UNROLL knob.
-    */
-  val defaultUnroll: Int =
-    IterationDriver.envUnroll("SPARK_GRAFT_CC_UNROLL", 4)
-
   final case class Config(
       maxIter: Int = 100,
       coarsenAfter: Int = 8,
@@ -68,12 +61,12 @@ object ConnectedComponents {
           (col("prop").isNotNull && col("prop") < col("label")).as("changed"))
     }
 
-    // convergence metric is next-only, so sweeps run through the fused
-    // unrolled driver: hash-min moves labels one hop per sweep and most
-    // levels run their full sweep budget, so composing sweeps into one job
-    // (lazy-checkpointed intermediates, single chain action + one metric
-    // read) amortizes the per-sweep submission overhead; values and the
-    // detected convergence sweep are identical to the plain loop.
+    // convergence metric is next-only, so sweeps unroll: hash-min moves
+    // labels one hop per sweep and most levels run their full sweep budget,
+    // so composing sweeps into one job (lazy-checkpointed intermediates,
+    // single chain action + one metric read) amortizes the per-sweep
+    // submission overhead; values and the detected convergence sweep are
+    // identical to unroll = 1.
     def changedAgg(next: DataFrame): DataFrame =
       next.agg(sum(when(col("changed"), 1L).otherwise(0L)).as("m"))
 
@@ -84,10 +77,10 @@ object ConnectedComponents {
     // crawler traps). Contraction shrinks the graph geometrically whenever
     // any label changed, so the recursion depth stays O(log diameter).
     val maxThisLevel = math.max(cfg.coarsenAfter, 2)
-    val res = IterationDriver.runFused(spark, init, step, changedAgg,
+    val res = IterationDriver.run(spark, init, step, changedAgg,
       IterConfig(tol = 0.0, maxIter = maxThisLevel,
         checkpointDir = cfg.checkpointDir.map(d => s"$d/level=$depth")),
-      unroll = ConnectedComponents.defaultUnroll)
+      IterationDriver.DefaultUnroll)
 
     val labels0 = res.state.select("id", "label")
     val converged = res.history.lastOption.forall(_.metric == 0.0)
@@ -164,13 +157,16 @@ object ConnectedComponents {
     // id-partitioned, so the first level's init state needs no re-hash
     val nodes = Materialize.checkpointForLoop(spark, GraphOps.nodes(edges))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val hashBuild = nodes.count() / math.max(parts, 1) <=
-      GraphOps.hashBuildMaxSliceRows
+    val n = nodes.count()
+    val hashBuild = n / math.max(parts, 1) <= GraphOps.hashBuildMaxSliceRows
     val labels = hashMin(spark, sym, nodes, cfg, 0, hashBuild)
     // dense renumber by ascending min-id (= BFS discovery order)
     val comps = labels.select(col("label")).distinct()
     val numbered = DenseId.assign(comps, "component", Seq("label"))
-    val out = labels.join(numbered, Seq("label"))
+    // strategy fixed at planning: left to AQE, the join broadcasts
+    // whichever side's query stage finishes first, so a rerun of the same
+    // query could plan and compile a different join
+    val out = labels.join(GraphOps.hashBuildHint(numbered, n, parts), Seq("label"))
       .select(col("id"), col("component"))
     sym.unpersist(); Materialize.free(nodes)
     out

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.GraphOps
+import graft.core.{GraphOps, Materialize}
 
 /** Exact diameter via the iFub bound-shrinking scheme
   * (`distance/Diameter.cpp` estimatedDiameterRange semantics, re-expressed
@@ -28,14 +28,16 @@ object Diameter {
     */
   def exact(spark: SparkSession, edges: DataFrame,
             maxLevels: Int = 1000): Long = {
-    // ONE traversal cache for every BFS this run makes (pivot pass, double
+    // ONE traversal table for every BFS this run makes (pivot pass, double
     // sweep, every fringe batch): symmetric orientation, src-partitioned,
-    // sorted, persisted — passed to SSSP.bfs as `prebuiltAdj` so no call
+    // sorted, checkpointed — passed to SSSP.bfs as `prebuiltAdj` so no call
     // re-symmetrizes (which would double the rows in every per-level join)
-    // or rebuilds the shuffle+sort+cache.
-    val sym = GraphOps.symmetrize(edges).select("src", "dst")
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // or rebuilds the shuffle+sort. A checkpoint, not a cache: a caller
+    // holding a cache of the same plan would share it, and unpersisting it
+    // here would drop the caller's.
+    val sym = Materialize.checkpointForLoop(spark,
+      GraphOps.symmetrize(edges).select("src", "dst")
+        .repartition(col("src")).sortWithinPartitions("src"))
     val comps = ConnectedComponents.run(spark, edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -131,7 +133,7 @@ object Diameter {
       cap = math.min(cap, 2 * (iLow - 1))
       i = iLow - 1
     }
-    sym.unpersist(); comps.unpersist(); pivots.unpersist()
+    Materialize.free(sym); comps.unpersist(); pivots.unpersist()
     pivotDist.unpersist(); eccDf.unpersist()
     lb
   }
@@ -165,8 +167,7 @@ object AlgebraicDistance {
                   iters: Int = 5, omega: Double = 0.5,
                   seed: Long = 42): DataFrame = {
     val canon = GraphOps.canonicalize(edges.where(col("src") =!= col("dst")))
-    val sym = GraphOps.symmetrize(canon)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = Materialize.checkpointForLoop(spark, GraphOps.symmetrize(canon))
     val cols = (0 until systems).map(s => s"x$s")
     var state = GraphOps.nodes(canon).select(
       col("id") +: (0 until systems).map(s =>
@@ -190,7 +191,7 @@ object AlgebraicDistance {
             coalesce(col(s"a_$c"), col(c)) * omega).as(c)): _*)
         .transform(graft.core.Materialize.checkpoint)
     }
-    sym.unpersist()
+    Materialize.free(sym)
     state
   }
 

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.GraphOps
+import graft.core.{GraphOps, Materialize}
 
 /** Per-edge attribute transforms and sparsification scores (SURVEY.md §2.7:
   * `edgescores/` combinators + `sparsification/` backbones). An edge-score
@@ -427,14 +427,14 @@ object EdgeScores {
   def forestFire(spark: SparkSession, edges: DataFrame, pf: Double = 0.7,
                  fires: Int = 64, maxRounds: Int = 16,
                  seed: Long = 42): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val canon = GraphOps.canonicalizeUnweighted(
       edges.where(col("src") =!= col("dst"))).select("src", "dst")
-    val sym = GraphOps.symmetrize(canon.withColumn("weight", lit(1.0)))
-      .select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = GraphOps.nodes(canon.withColumn("weight", lit(1.0)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count()
+    // checkpoints, not caches: a caller holding a cache of the same plan
+    // would share it, and unpersisting it here would drop the caller's
+    val sym = Materialize.checkpointForLoop(spark,
+      GraphOps.symmetrize(canon.withColumn("weight", lit(1.0))).select("src", "dst"))
+    val nodes = Materialize.checkpointForLoop(spark,
+      GraphOps.nodes(canon.withColumn("weight", lit(1.0))))
     // fire f starts at the node with min hash(seed, f, id) — a uniform,
     // reproducible pick per fire
     val starts = nodes
@@ -484,7 +484,7 @@ object EdgeScores {
       .select(col("src"), col("dst"),
         (coalesce(col("b"), lit(0L)).cast("double") /
           (if (maxB > 0) maxB.toDouble else 1.0)).as("score"))
-    sym.unpersist(); nodes.unpersist()
+    Materialize.free(sym); Materialize.free(nodes)
     res
   }
 }

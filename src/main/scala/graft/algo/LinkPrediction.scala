@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.GraphOps
+import graft.core.{GraphOps, Materialize}
 
 /** Link-prediction indices on common-neighborhood statistics
   * (`networkit/cpp/linkprediction/` — CommonNeighborsIndex,
@@ -156,9 +156,9 @@ object LinkPrediction {
     */
   def katz(spark: SparkSession, edges: DataFrame, maxNodeId: Long,
            maxPathLength: Int = 3, beta: Double = 0.005): DataFrame = {
-    val sym = GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(
-      edges.where(col("src") =!= col("dst")))).select("src", "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sym = Materialize.checkpointForLoop(spark,
+      GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(
+        edges.where(col("src") =!= col("dst")))).select("src", "dst"))
     // walks_l(a, x): #walks of length l from candidate a to any node x
     var walks = sym.where(col("src") < maxNodeId)
       .select(col("src").as("a"), col("dst").as("x"), lit(1L).as("cnt"))
@@ -177,8 +177,9 @@ object LinkPrediction {
           .select(col("a"), col("x").as("b"),
             (col("cnt") * math.pow(beta, l)).as("s")))
     }
+    // `acc` reads only the checkpointed walks, never `sym`
     val res = acc.groupBy("a", "b").agg(sum("s").as("katz"))
-    sym.unpersist()
+    Materialize.free(sym)
     res
   }
 

@@ -75,7 +75,6 @@ object PLM {
 
     var labels = nodes.select(col("id"), col("id").as("label"))
       .transform(graft.core.Materialize.checkpoint)
-    var labelsCk = labels // the checkpointed generation behind `labels`
     var pass = 0
     var moved = 1L
     // moved count two passes ago (same parity as the current pass) — the
@@ -90,17 +89,10 @@ object PLM {
     var plateau = false
     val verbose = sys.env.contains("SPARK_GRAFT_PLM_VERBOSE")
 
-    // One pass's full candidate/argmax pipeline as a plan (no action, no
-    // materialization) so red+black pass PAIRS can compose into one chain
-    // job (SPARK_GRAFT_PLM_FUSE=0 for the plain per-pass loop). The input
-    // state's `changed` flag (when present) is carried through as
-    // `prev_changed`, so a fused pair reads BOTH passes' move counts from
-    // the final state alone — intermediates are never read back by a
-    // driver action (required under AQE: stage-wise materialization does
-    // not reliably run doCheckpoint for lazily-checkpointed intermediates,
-    // so their blocks may not exist after the chain job).
-    def passPlan(stIn: DataFrame, passNo: Int): DataFrame = {
-      val labelsP = stIn.select("id", "label")
+    // One pass's full candidate/argmax pipeline: `(id, label)` in,
+    // `(id, label, changed)` out.
+    def passPlan(state: DataFrame, passNo: Int): DataFrame = {
+      val labelsP = state.select("id", "label")
       val parity = passNo % 2
       // NOT checkpointed although referenced twice below (cvolD and cvolC
       // sides): it is a node-scale aggregate with shallow lineage (both
@@ -180,92 +172,29 @@ object PLM {
         .select(col("id"), col("b.nlabel").as("winner"))
       // changed-flag carried in the state: the move count is a cheap scan
       // of materialized rows, not a second evaluation of the whole
-      // candidate/argmax pipeline; prev_changed carries the INPUT state's
-      // flag forward for the fused pair's single count action
-      val prevChangedCol =
-        if (stIn.columns.contains("changed")) col("changed") else lit(false)
-      stIn.select(col("id"), col("label"), prevChangedCol.as("pci"))
-        .join(best.select("id", "winner"), Seq("id"), "left")
+      // candidate/argmax pipeline
+      labelsP.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("winner"), col("label")).as("label"),
-          col("winner").isNotNull.as("changed"),
-          col("pci").as("prev_changed"))
+          col("winner").isNotNull.as("changed"))
     }
 
-    // Replay of the sequential per-pass stop decisions, shared by both loop
-    // flavors; `shouldContinue` gates each further pass (the fused pair
-    // re-evaluates it mid-group to discard an overshoot pass).
-    def recordPass(m: Long, parity: Int): Unit = {
-      moved = m
-      if (cfg.stopEarly && m.toDouble >= prevSameParity(parity) * 0.995)
-        plateau = true
-      prevSameParity(parity) = m
-    }
-    def shouldContinue: Boolean =
-      (moved > 0 || !cfg.stopEarly) && !plateau && pass < cfg.maxMovePasses
-
-    // Default OFF: the round-5 interleaved A/B (BASELINE.md) measured the
-    // fused pair SLOWER in 2 of 3 windows (pairwise +11/+14/−24 s at 2M
-    // nodes) — PLM's passes are data-dominated under AQE and the lazy
-    // intermediate state is read by three branches of the pair job, whose
-    // concurrently-materializing stages can each compute its partitions
-    // before the cache fills (redundant work the plain loop's eager
-    // checkpoint never does). System property first so the A/B runner can
-    // toggle within one JVM; env for driver-side runs.
-    val fuse = sys.props.get("graft.plm.fuse")
-      .orElse(sys.env.get("SPARK_GRAFT_PLM_FUSE")).contains("1")
-    while (shouldContinue) {
+    while ((moved > 0 || !cfg.stopEarly) && !plateau && pass < cfg.maxMovePasses) {
       val t0 = System.nanoTime()
-      if (fuse && pass + 2 <= cfg.maxMovePasses) {
-        // red+black pair in ONE chain job: pass A lazily checkpointed
-        // (plan truncation; materializes inside the pair job where pass B
-        // reads it), pass B eager — then both move counts from one cheap
-        // aggregate over the final state. Values and stop decisions are
-        // pass-for-pass identical to the plain loop; if the sequential
-        // loop would have stopped after pass A, pass B's state is
-        // discarded unobserved (runFused's overshoot contract).
-        val s1 = graft.core.Materialize.checkpointLazy(passPlan(labelsCk, pass + 1))
-        val s2 = graft.core.Materialize.checkpoint(passPlan(s1, pass + 2))
-        val row = s2.agg(
-          sum(when(col("prev_changed"), 1L).otherwise(0L)).as("m1"),
-          sum(when(col("changed"), 1L).otherwise(0L)).as("m2")).head()
-        val (m1, m2) = (row.getLong(0), row.getLong(1))
-        pass += 1
-        recordPass(m1, pass % 2)
-        if (shouldContinue) {
-          pass += 1
-          recordPass(m2, pass % 2)
-          graft.core.Materialize.free(labelsCk)
-          graft.core.Materialize.free(s1)
-          labelsCk = s2
-        } else {
-          // overshoot: keep pass A's state; re-checkpoint it eagerly (its
-          // blocks are cached from the pair job, but only an eager
-          // checkpoint owns self-contained blocks we may hold long-term)
-          val s1e = graft.core.Materialize.checkpoint(
-            s1.select("id", "label", "changed", "prev_changed"))
-          graft.core.Materialize.free(labelsCk)
-          graft.core.Materialize.free(s2)
-          graft.core.Materialize.free(s1)
-          labelsCk = s1e
-        }
-        labels = labelsCk.select("id", "label")
-        if (verbose) System.err.println(
-          f"[plm] passes ${pass - 1}+ (fused pair) moved=$m1/$m2 kept=$pass ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      } else {
-        pass += 1
-        val newLabels = passPlan(labelsCk, pass)
-          .transform(graft.core.Materialize.checkpoint)
-        val m = newLabels.where(col("changed")).count()
-        recordPass(m, pass % 2)
-        graft.core.Materialize.free(labelsCk)
-        labelsCk = newLabels
-        labels = newLabels.select("id", "label")
-        if (verbose) System.err.println(
-          f"[plm] pass $pass moved=$m ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
+      pass += 1
+      val newLabels = passPlan(labels, pass)
+        .transform(graft.core.Materialize.checkpoint)
+      moved = newLabels.where(col("changed")).count()
+      val parity = pass % 2
+      if (cfg.stopEarly && moved.toDouble >= prevSameParity(parity) * 0.995)
+        plateau = true
+      prevSameParity(parity) = moved
+      graft.core.Materialize.free(labels)
+      labels = newLabels
+      if (verbose) System.err.println(
+        f"[plm] pass $pass moved=$moved ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     nbrs.unpersist(blocking = false)
-    labels
+    labels.select("id", "label")
   }
 
   def run(spark: SparkSession, edges: DataFrame,

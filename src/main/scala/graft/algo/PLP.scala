@@ -45,13 +45,6 @@ import graft.iterate.{IterConfig, IterationDriver}
   */
 object PLP {
 
-  /** Sweep-unroll factor for the fused red-black loop; env-overridable for
-    * A/B and plain-loop-fallback debugging (`SPARK_GRAFT_PLP_UNROLL=1`),
-    * mirroring PageRank's SPARK_GRAFT_PR_UNROLL knob.
-    */
-  val defaultUnroll: Int =
-    IterationDriver.envUnroll("SPARK_GRAFT_PLP_UNROLL", 4)
-
   final case class Config(
       updateThreshold: Long = -1, // -1 → max(1, n/1e5) like the reference
       maxIter: Int = 100,
@@ -138,18 +131,18 @@ object PLP {
 
     // a full round = red + black sweep; stop when the round's total updates
     // fall to the reference's threshold (PLP.cpp:41-43 stop rule shape)
-    // next-only metric → fused unrolled driver (IterationDriver.runFused):
-    // red+black sweep pairs compose into one chain job with a single metric
-    // read, amortizing per-sweep submission overhead; the detected stop
-    // sweep and every label are identical to the plain loop.
+    // next-only metric, so red+black sweep pairs compose into one chain job
+    // with a single metric read (IterationDriver.run's unroll), amortizing
+    // per-sweep submission overhead; the detected stop sweep and every
+    // label are identical to unroll = 1.
     def updatedAgg(next: DataFrame): DataFrame =
       next.agg(sum(when(col("changed") || col("prev_changed"), 1L)
         .otherwise(0L)).as("m"))
 
-    val res = IterationDriver.runFused(spark, init, step, updatedAgg,
+    val res = IterationDriver.run(spark, init, step, updatedAgg,
       IterConfig(tol = threshold, maxIter = cfg.maxIter,
         checkpointDir = cfg.checkpointDir),
-      unroll = PLP.defaultUnroll)
+      IterationDriver.DefaultUnroll)
 
     sym.unpersist(); Materialize.free(nodes)
     Result(res.state.select("id", "label"), res.iterations, res.history)

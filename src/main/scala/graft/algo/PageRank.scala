@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.GraphOps
-import graft.iterate.{IterConfig, IterationDriver, IterResult}
+import graft.iterate.{IterConfig, IterationDriver}
 
 /** PageRank — power iteration with damping, matching the reference's exact
   * semantics (`networkit/cpp/centrality/PageRank.cpp:20-71`):
@@ -32,12 +32,6 @@ import graft.iterate.{IterConfig, IterationDriver, IterResult}
   */
 object PageRank {
 
-  /** Default iteration-unroll factor (see `Config.unroll`); measured best
-    * at bench scale via the SPARK_GRAFT_PR_UNROLL A/B.
-    */
-  val defaultUnroll: Int =
-    IterationDriver.envUnroll("SPARK_GRAFT_PR_UNROLL", 4)
-
   final case class Config(
       damping: Double = 0.85,
       tol: Double = 1e-9,
@@ -45,16 +39,16 @@ object PageRank {
       checkpointDir: Option[String] = None,
       shufflePartitions: Int = 0,
       checkpointEvery: Int = 5,
-      /** iterations composed into one Spark job (IterationDriver.runFused):
+      /** iterations composed into one Spark job (IterationDriver.run):
         * each hop is lazily local-checkpointed and all hop L2 scalars ride a
         * single action, amortizing the per-iteration job-submission +
         * convergence-read overhead (~half the per-iteration wall at bench
         * scale). Values are hop-for-hop identical to unroll=1, convergence
         * is detected at the exact same iteration, and disk-checkpoint /
         * resume layouts are unchanged (groups clamp at snapshot
-        * boundaries). SPARK_GRAFT_PR_UNROLL overrides for measurement.
+        * boundaries).
         */
-      unroll: Int = PageRank.defaultUnroll)
+      unroll: Int = IterationDriver.DefaultUnroll)
 
   final case class Result(scores: DataFrame, iterations: Int,
                           history: Vector[graft.iterate.IterRecord],
@@ -136,19 +130,10 @@ object PageRank {
           col("prevScore").as("prev"))
     }
 
-    def l2diff(prevState: DataFrame, next: DataFrame): Double =
-      math.sqrt(next.agg(sum(pow(col("score") - col("prev"), 2)).as("s"))
-        .head().getDouble(0))
-
-    val iterCfg =
-      IterConfig(cfg.tol, cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery)
-    val res: IterResult =
-      if (cfg.unroll > 1)
-        IterationDriver.runFused(spark, init, step,
-          next => next.agg(
-            sqrt(sum(pow(col("score") - col("prev"), 2))).as("m")),
-          iterCfg, cfg.unroll)
-      else IterationDriver.run(spark, init, step, l2diff, iterCfg)
+    val res = IterationDriver.run(spark, init, step,
+      next => next.agg(sqrt(sum(pow(col("score") - col("prev"), 2))).as("m")),
+      IterConfig(cfg.tol, cfg.maxIter, cfg.checkpointDir, cfg.checkpointEvery),
+      cfg.unroll)
 
     val l1 = res.state.agg(sum(abs(col("score")))).head().getDouble(0)
     val scores = res.state.select(col("id"), (col("score") / l1).as("score"))

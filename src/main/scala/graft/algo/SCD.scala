@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.GraphOps
+import graft.core.{GraphOps, Materialize}
 import graft.iterate.{IterConfig, IterationDriver}
 
 /** Selective community detection (SURVEY.md §2.6 SCD row):
@@ -60,15 +60,16 @@ object SCD {
           col("prevScore").as("prev"))
     }
 
-    def l2(prev: DataFrame, next: DataFrame): Double =
-      math.sqrt(next.agg(sum(pow(col("score") - col("prev"), 2)))
-        .head().getDouble(0))
+    def l2Agg(next: DataFrame): DataFrame =
+      next.agg(sqrt(sum(pow(col("score") - col("prev"), 2))).as("m"))
 
     val cfg = exactIters match {
       case Some(k) => IterConfig(tol = -1.0, maxIter = k) // metric ≥ 0 > -1: never stops early
       case None    => IterConfig(tol, maxIter)
     }
-    IterationDriver.run(spark, init, step, l2, cfg)
+    // unroll = 1: the eager one-job-per-iteration schedule it always ran;
+    // no A/B has measured unrolling this loop
+    IterationDriver.run(spark, init, step, l2Agg, cfg, unroll = 1)
       .state.select("id", "score")
   }
 
@@ -150,10 +151,9 @@ object SCD {
     */
   def gce(spark: SparkSession, edges: DataFrame, seed: Long,
           maxSize: Int = 10000, maxFetch: Int = 200000): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val sym = GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(
-      edges.where(col("src") =!= col("dst")))).select("src", "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = Materialize.checkpointForLoop(spark,
+      GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(
+        edges.where(col("src") =!= col("dst")))).select("src", "dst"))
 
     // fetch one node's neighbor list (narrow filter; a hub's list is the
     // natural upper bound — same locality the reference's forNeighborsOf
@@ -213,7 +213,7 @@ object SCD {
           }
       }
     }
-    sym.unpersist()
+    Materialize.free(sym)
     import spark.implicits._
     community.toSeq.sorted.toDF("id")
   }

@@ -10,9 +10,8 @@ import graft.ingest.PageGen
   * interleave — rep 1 of A, rep 1 of B, rep 2 of A, ... — and the
   * comparison reads the rep SPREADS, not single numbers).
   *
-  * Usage: `graft.cli.AbBench <mode: kcore|plm|sssp> [reps=3] [nodes=2000000]`
+  * Usage: `graft.cli.AbBench <mode: kcore|sssp> [reps=3] [nodes=2000000]`
   *   kcore — tail region-compaction ON (auto n/100 trigger) vs OFF
-  *   plm   — red+black pass-pair fusing ON vs OFF (graft.plm.fuse sysprop)
   *   sssp  — weighted-SSSP relax unroll 4 vs 1 on an n/5000-node weighted
   *           path (high-diameter worst case: one relax round per hop, so
   *           the measured delta IS the per-round driver overhead)
@@ -48,15 +47,6 @@ object AbBench {
             val t0 = System.nanoTime()
             graft.algo.Centrality.coreDecomposition(spark, edges, compactAt)
               .agg(max("coreness")).head()
-            (System.nanoTime() - t0) / 1e9
-          case "plm" =>
-            sys.props("graft.plm.fuse") = if (v == "on") "1" else "0"
-            graft.algo.PLM.run(spark, wEdges).labels
-              .agg(countDistinct("label")).head()
-            freeState()
-            val t0 = System.nanoTime()
-            graft.algo.PLM.run(spark, edges).labels
-              .agg(countDistinct("label")).head()
             (System.nanoTime() - t0) / 1e9
           case "sssp" =>
             import spark.implicits._

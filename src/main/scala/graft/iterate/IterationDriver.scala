@@ -2,7 +2,6 @@ package graft.iterate
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** Per-iteration record written to the checkpoint manifest — the north
@@ -41,16 +40,17 @@ object IterConfig {
 final case class IterResult(state: DataFrame, iterations: Int,
                             history: Vector[IterRecord], resumedFrom: Int)
 
-/** Generic convergence loop shared by PageRank / connected components / PLP:
+/** The convergence loop shared by PageRank, connected components, PLP,
+  * weighted SSSP, eigenvector, Katz and personalized PageRank:
   *
-  *   state₀ → step → state₁ → … until `metric(prev, next) <= tol` or maxIter.
+  *   state₀ → step → state₁ → … until `metric(stateᵢ) <= tol` or maxIter.
   *
-  * Responsibilities: persist/unpersist bracketing (exactly one cached state
-  * generation live at a time), lineage truncation, resumable disk
-  * checkpoints (parquet state + JSONL manifest; a snapshot is visible only
-  * after its manifest line is appended, so a killed run resumes from the
-  * last complete iteration — the reference has nothing like this, it reruns
-  * from scratch; at 10^12-edge scale resumability is mandatory).
+  * Responsibilities: exactly one state generation held at a time, lineage
+  * truncation, resumable disk checkpoints (parquet state + JSONL manifest;
+  * a snapshot is visible only after its manifest line is appended, so a
+  * killed run resumes from the last complete iteration — the reference has
+  * nothing like this, it reruns from scratch; at 10^12-edge scale
+  * resumability is mandatory).
   *
   * In-sandbox the checkpoint store is a local directory; in production the
   * same layout maps to an Iceberg table partitioned by `iter` (SURVEY.md
@@ -58,22 +58,11 @@ final case class IterResult(state: DataFrame, iterations: Int,
   */
 object IterationDriver {
 
-  /** Parse an iteration-unroll override from the environment. Malformed or
-    * < 1 values fall back to `default` with a stderr warning — a bare
-    * `.toInt` here would throw inside a lazy object initializer and poison
-    * the whole algorithm object for the JVM's lifetime with an opaque
-    * `ExceptionInInitializerError`.
+  /** Iterations composed into one Spark job by the algorithms that run on
+    * this loop (see `run`). The unroll A/Bs in BASELINE.md (PageRank 1, 2
+    * and 4; weighted SSSP 1 and 4) picked 4.
     */
-  def envUnroll(name: String, default: Int): Int =
-    sys.env.get(name) match {
-      case None => default
-      case Some(v) =>
-        scala.util.Try(v.trim.toInt).toOption.filter(_ >= 1).getOrElse {
-          System.err.println(
-            s"[graft] ignoring $name='$v' (need an int >= 1); using $default")
-          default
-        }
-    }
+  val DefaultUnroll: Int = 4
 
   private def manifestPath(dir: String) = Paths.get(dir, "manifest.jsonl")
 
@@ -130,20 +119,6 @@ object IterationDriver {
     }
   }
 
-  /** Rewrites the manifest without a torn last line, so the records a
-    * resumed run appends are not glued onto it.
-    */
-  private def dropTornTail(dir: String): Unit = {
-    val p = manifestPath(dir)
-    if (Files.exists(p)) {
-      val lines = Files.readAllLines(p).asScala.toVector.filter(_.nonEmpty)
-      val recs = readManifest(dir)
-      if (recs.length < lines.length)
-        Files.write(p, lines.take(recs.length).map(_ + "\n").mkString
-          .getBytes("UTF-8"))
-    }
-  }
-
   private def appendManifest(dir: String, r: IterRecord): Unit = {
     Files.createDirectories(Paths.get(dir))
     val line = s"""{"iter":${r.iter},"metric":${r.metric},"wall_ms":${r.wallMs},"rows":${r.rows},"snapshot":"${r.snapshot}"}""" + "\n"
@@ -151,105 +126,59 @@ object IterationDriver {
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
-  /** Latest complete snapshot in `dir`, if any. A torn last manifest line
-    * is cut from the file first, so the resumed run's records follow the
-    * last complete one.
+  /** Latest complete snapshot in `dir`, if any. The manifest is cut so it
+    * ends at that snapshot's record (or is emptied when there is none):
+    * the resumed run appends the iterations after it, so records past it —
+    * and a torn last line — would otherwise appear twice or be glued onto
+    * the next record. The file is rewritten only when there is something
+    * to cut.
     */
   def latestSnapshot(spark: SparkSession, dir: String): Option[(Int, DataFrame)] = {
-    dropTornTail(dir)
-    val recs = readManifest(dir).filter(_.snapshot.nonEmpty)
-    recs.lastOption.map(r => (r.iter, spark.read.parquet(r.snapshot)))
-  }
-
-  /** Run the loop. `step(state, iter)` produces the next state; `metric`
-    * compares consecutive states (an action). Convergence when
-    * `metric <= tol`. If `cfg.checkpointDir` holds a previous run's
-    * manifest, resumes from its last snapshot (warm start).
-    *
-    * Every iteration is eagerly `localCheckpoint`ed: the new state
-    * materializes once into the block manager and its logical plan is
-    * truncated to a `LogicalRDD`. Without this, iterative plans nest one
-    * `InMemoryRelation`/`AdaptiveSparkPlanExec` per iteration and both
-    * re-analysis and plan-string generation go super-linear (the well-known
-    * iterative-lineage blowup — SURVEY.md §7.4.3); with it, every
-    * iteration's plan is flat and planning cost is O(1) in the iteration
-    * number. Exactly one state generation is retained at a time.
-    */
-  def run(spark: SparkSession, init: => DataFrame,
-          step: (DataFrame, Int) => DataFrame,
-          metric: (DataFrame, DataFrame) => Double,
-          cfg: IterConfig): IterResult = {
-
-    // AQE is OFF inside the loop (restored on exit) — see
-    // `Sessions.withoutAqe` for the rationale and measurements. The fixed
-    // per-stage driver re-planning cost is 22-35% of iteration wall time at
-    // sandbox scale and is the serial fraction that caps N→4N scaling
-    // efficiency.
-    graft.core.Sessions.withoutAqe(spark)(runLoop(spark, init, step, metric, cfg))
-  }
-
-  private def runLoop(spark: SparkSession, init: => DataFrame,
-          step: (DataFrame, Int) => DataFrame,
-          metric: (DataFrame, DataFrame) => Double,
-          cfg: IterConfig): IterResult = {
-
-    val resumed = cfg.checkpointDir.flatMap(latestSnapshot(spark, _))
-    val startIter = resumed.map(_._1).getOrElse(0)
-    var state = resumed.map(_._2).getOrElse(init).transform(graft.core.Materialize.checkpoint)
-    var history = Vector.empty[IterRecord]
-
-    var iter = startIter
-    var converged = false
-    while (!converged && iter < cfg.maxIter) {
-      val t0 = System.nanoTime()
-      iter += 1
-      // eager: materializes the new state and truncates lineage
-      var next = step(state, iter).transform(graft.core.Materialize.checkpoint)
-      val m = metric(state, next)
-      converged = m <= cfg.tol
-
-      val doCheckpoint = cfg.checkpointDir.isDefined &&
-        (converged || iter % cfg.checkpointEvery == 0)
-      var snapshot = ""
-      val rows = -1L
-      if (doCheckpoint) {
-        val dir = cfg.checkpointDir.get
-        snapshot = s"$dir/state/iter=${"%05d".format(iter)}"
-        next.write.mode("overwrite").parquet(snapshot)
-        graft.core.Materialize.free(next)
-        // reload: resume-from-disk ≡ continue-in-memory, bit-identical
-        next = spark.read.parquet(snapshot).transform(graft.core.Materialize.checkpoint)
-      }
-      graft.core.Materialize.free(state)
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      val rec = IterRecord(iter, m, wallMs, rows, snapshot)
-      history :+= rec
-      cfg.checkpointDir.foreach(appendManifest(_, rec))
-      state = next
+    val p = manifestPath(dir)
+    val recs = readManifest(dir)
+    val keep = recs.lastIndexWhere(_.snapshot.nonEmpty) + 1
+    if (Files.exists(p)) {
+      val lines = Files.readAllLines(p).asScala.toVector.filter(_.nonEmpty)
+      if (lines.length > keep)
+        Files.write(p, lines.take(keep).map(_ + "\n").mkString.getBytes("UTF-8"))
     }
-    IterResult(state, iter - startIter, history, startIter)
+    recs.take(keep).lastOption.map(r => (r.iter, spark.read.parquet(r.snapshot)))
   }
 
-  /** Unrolled variant of `run`: composes up to `unroll` steps into ONE
-    * Spark job per loop pass, for operators whose convergence metric is a
-    * 1-row GLOBAL aggregate over the NEW state alone — `metricAgg(next)`
-    * must return exactly ONE column and exactly ONE row (an ungrouped
-    * aggregate; PageRank embeds `prev` in the state for exactly this).
-    * Both halves of the contract are asserted at runtime: a multi-column
-    * aggregate fails the per-hop column check, a grouped (multi-row) one
-    * fails the collected-row-count check — neither can silently become a
-    * wrong convergence decision.
+  /** Run the loop. `step(state, iter)` produces the next state;
+    * `metricAgg(next)` is the convergence metric as a 1-row GLOBAL
+    * aggregate over the new state alone — exactly ONE column and exactly
+    * ONE row (an ungrouped aggregate; PageRank carries `prev` in the state
+    * for exactly this). Both halves of the contract are asserted at
+    * runtime: a multi-column aggregate fails the per-hop column check, a
+    * grouped (multi-row) one fails the collected-row-count check — neither
+    * can silently become a wrong convergence decision. Convergence when
+    * `metric <= tol`; a null metric (empty state) reads as 0.0. If
+    * `cfg.checkpointDir` holds a previous run's manifest, resumes from its
+    * last snapshot (warm start).
     *
-    * Why: at sandbox bench scale the per-iteration wall is roughly half
+    * Every state is `localCheckpoint`ed: its logical plan is truncated to
+    * a flat `LogicalRDD`. Without this, iterative plans nest one
+    * `InMemoryRelation`/`AdaptiveSparkPlanExec` per iteration and both
+    * re-analysis and plan-string generation go super-linear (the
+    * well-known iterative-lineage blowup — SURVEY.md §7.4.3); with it,
+    * every iteration's plan is flat and planning cost is O(1) in the
+    * iteration number. AQE is off inside the loop (restored on exit) — see
+    * `Sessions.withoutAqe` for the rationale and measurements.
+    *
+    * `unroll` composes up to that many steps into ONE Spark job per loop
+    * pass. At bench scale the per-iteration wall is roughly half
     * fixed driver overhead — one job round-trip to materialize the state
-    * (eager localCheckpoint) plus one to read the convergence scalar. This
-    * loop lazily local-checkpoints each intermediate hop (plan truncates to
-    * a flat `LogicalRDD` immediately; the data materializes and caches when
-    * the enclosing job first computes through it — the kcore
-    * sweep-unrolling mechanism), eagerly checkpoints only the LAST hop (the
-    * group's one chain job), then reads all k convergence scalars from the
-    * cached states in one cheap second action: k materializations + k
-    * metrics ride two job submissions instead of 2k.
+    * plus one to read the convergence scalar. Each intermediate hop of a
+    * group is lazily local-checkpointed (the plan truncates to a flat
+    * `LogicalRDD` immediately; the data materializes and caches when the
+    * enclosing job first computes through it — the kcore sweep-unrolling
+    * mechanism), only the LAST hop is checkpointed eagerly (the group's one
+    * chain job), then all k convergence scalars are read from the cached
+    * states in one cheap second action: k materializations + k metrics
+    * ride two job submissions instead of 2k. `unroll = 1` is the eager
+    * per-iteration schedule: every state materializes in its own job,
+    * followed by its metric read.
     *
     * Requirement on `step`: the plan it returns should contain each
     * intermediate result once. Several stages may read the same hop: the
@@ -262,30 +191,29 @@ object IterationDriver {
     * the work grows (BASELINE.md has the stage listing of a PLP step that
     * referenced its vote three times).
     *
-    * Exactness is preserved hop-for-hop: each hop's values are identical to
-    * the un-unrolled loop (lazy checkpoint changes scheduling, not data),
-    * and convergence is detected at the FIRST hop whose metric ≤ tol — the
-    * reported iteration count and returned state match `run` exactly; hops
-    * computed past convergence inside the final group are freed, never
-    * observed. Groups never cross a disk-checkpoint boundary (the group is
-    * clamped so snapshots land exactly where `run` would put them), so
-    * resume manifests are interchangeable between the two loops; with
-    * `checkpointEvery = 1` (the production preset) the group size degrades
-    * to 1 ≡ `run`. Per-hop manifest records carry the group wall divided
-    * evenly across its hops (the amortized per-iteration figure), with the
-    * division remainder assigned to the group's last hop so the summed
-    * wallMs equals the true group wall.
+    * Every `unroll` gives the same values hop for hop (a lazy checkpoint
+    * changes scheduling, not data), and convergence is detected at the
+    * FIRST hop whose metric ≤ tol, so the reported iteration count and the
+    * returned state do not depend on `unroll`; hops computed past
+    * convergence inside the final group are freed, never observed. Groups
+    * never cross a disk-checkpoint boundary (a group is clamped so
+    * snapshots land at every multiple of `checkpointEvery` and at
+    * convergence, whatever `unroll`), so a manifest written under one
+    * `unroll` resumes under another; with `checkpointEvery = 1` (the
+    * production preset) every group is one hop. Per-hop manifest records
+    * carry the group wall divided evenly across its hops (the amortized
+    * per-iteration figure), with the division remainder assigned to the
+    * group's last hop so the summed wallMs equals the true group wall.
     */
-  def runFused(spark: SparkSession, init: => DataFrame,
+  def run(spark: SparkSession, init: => DataFrame,
           step: (DataFrame, Int) => DataFrame,
           metricAgg: DataFrame => DataFrame,
           cfg: IterConfig, unroll: Int): IterResult = {
     require(unroll >= 1, s"unroll must be >= 1, got $unroll")
-    graft.core.Sessions.withoutAqe(spark)(
-      runLoopFused(spark, init, step, metricAgg, cfg, unroll))
+    graft.core.Sessions.withoutAqe(spark)(loop(spark, init, step, metricAgg, cfg, unroll))
   }
 
-  private def runLoopFused(spark: SparkSession, init: => DataFrame,
+  private def loop(spark: SparkSession, init: => DataFrame,
           step: (DataFrame, Int) => DataFrame,
           metricAgg: DataFrame => DataFrame,
           cfg: IterConfig, unroll: Int): IterResult = {
@@ -300,8 +228,7 @@ object IterationDriver {
     var converged = false
     while (!converged && iter < cfg.maxIter) {
       val t0 = System.nanoTime()
-      // hops until the next disk-checkpoint boundary: snapshots must land
-      // at exactly the iterations `run` would snapshot, so a group never
+      // hops until the next disk-checkpoint boundary: a group never
       // crosses a multiple of checkpointEvery.
       val toBoundary = cfg.checkpointDir
         .map(_ => cfg.checkpointEvery - (iter % cfg.checkpointEvery))
@@ -326,16 +253,15 @@ object IterationDriver {
       val mrows = hops.zipWithIndex.map { case (h, j) =>
         val agg = metricAgg(h)
         require(agg.columns.length == 1,
-          s"runFused metricAgg must return exactly one column (the metric); " +
+          s"metricAgg must return exactly one column (the metric); " +
             s"got ${agg.columns.mkString("[", ",", "]")}")
         agg.select(lit(j).as("_hop"), col(agg.columns.head).cast("double").as("_m"))
       }.reduce(_ unionByName _).collect()
       require(mrows.length == k,
-        s"runFused metricAgg must be a 1-row (ungrouped) aggregate; " +
+        s"metricAgg must be a 1-row (ungrouped) aggregate; " +
           s"$k hops produced ${mrows.length} metric rows")
       val ms: Array[Double] = {
-        // a null aggregate (empty state) reads as 0.0 = converged, matching
-        // the plain loop's count/sum-over-empty behavior
+        // a null aggregate (empty state) reads as 0.0 = converged
         val byHop = mrows.map(r =>
           r.getInt(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1))).toMap
         Array.tabulate(k)(byHop)
@@ -357,6 +283,7 @@ object IterationDriver {
         snapshot = s"$dir/state/iter=${"%05d".format(iter + used)}"
         next.write.mode("overwrite").parquet(snapshot)
         graft.core.Materialize.free(next)
+        // reload: resume-from-disk ≡ continue-in-memory, bit-identical
         next = spark.read.parquet(snapshot).transform(graft.core.Materialize.checkpoint)
       }
       for (j <- 0 until used - 1) graft.core.Materialize.free(hops(j))

@@ -7,11 +7,13 @@ import graft.iterate.{CorruptManifestException, IterationDriver}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Contract tests for `IterationDriver.runFused` (the unrolled chain-job
-  * loop): hop-for-hop parity with the plain loop — identical score
-  * trajectories, identical detected convergence iteration, interchangeable
-  * disk-checkpoint manifests, and resume across loop flavors — also from
-  * a manifest whose last line a kill tore.
+/** Contract tests for `IterationDriver.run`, the one convergence loop:
+  * `unroll = 1` (one job per iteration) against `unroll = k` (k iterations
+  * per chain job) — identical score trajectories, identical detected
+  * convergence iteration, interchangeable disk-checkpoint manifests, and
+  * resume across unroll factors — also from a manifest whose last line a
+  * kill tore — plus a 250-round weighted-SSSP drain, the unrolled loop's
+  * worst case.
   */
 class FusedLoopSpec extends SparkTestBase {
 
@@ -106,8 +108,10 @@ class FusedLoopSpec extends SparkTestBase {
     val a = resumed.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val b = clean.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(a == b)
-    // the torn line was cut, not glued to the resumed run's first record
+    // the torn line was cut, not glued to the resumed run's first record,
+    // and the records after the resumed snapshot were not kept twice
     assert(IterationDriver.readManifest(dir).last.iter == clean.iterations)
+    assert(IterationDriver.readManifest(dir).map(_.iter) == (1 to clean.iterations))
   }
 
   test("an invalid manifest record followed by valid ones is a typed error") {
@@ -124,5 +128,20 @@ class FusedLoopSpec extends SparkTestBase {
     Files.write(dir.resolve("manifest.jsonl"),
       (rec(1) + "\n" + """{"iter":2,"met""").getBytes("UTF-8"))
     assert(IterationDriver.readManifest(dir.toString).map(_.iter) == Seq(1))
+  }
+
+  test("weighted SSSP: 250-round relax drain on a weighted path is exact " +
+      "under the fused loop") {
+    // A 251-node weighted path needs one relax round per hop (the unrolled
+    // loop's worst case — and its motivation: 2 driver round-trips per
+    // round at unroll = 1). Distances are the weight prefix sums.
+    val w = (0 until 250).map(i => 1.0 + (i % 5) * 0.25)
+    val path = (0 until 250).map(i => (i.toLong, i + 1L, w(i)))
+    val got = graft.algo.SSSP
+      .weighted(spark, edgeDF(path), source = 0L, directed = true)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val want = (0 to 250).map(k => k.toLong -> w.take(k).sum).toMap
+    assert(got.size == want.size)
+    for ((k, d) <- want) assert(math.abs(got(k) - d) < 1e-9, s"node $k")
   }
 }

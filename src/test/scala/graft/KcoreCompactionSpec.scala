@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Round-5 additions: kcore tail region-compaction (escape/rollback path),
-  * fused weighted SSSP / eigenvector loops, PLM pass-pair fusing.
+/** kcore tail region-compaction (`Centrality.coreDecomposition(compactAt)`):
+  * the escape/rollback path, and compaction forced on against compaction
+  * off.
   */
-class Round7Spec extends SparkTestBase {
+class KcoreCompactionSpec extends SparkTestBase {
 
-  // ------------------------------------------------- kcore compaction
   test("kcore region compaction: traveling cascade stays exact under " +
       "forced compaction with escapes and rollbacks") {
     // A 240-node path drains its H-index one hop per sweep from both ends —
@@ -29,22 +27,6 @@ class Round7Spec extends SparkTestBase {
     val want = (0L until 240L).map(_ -> 1L).toMap ++
       (1000L until 1005L).map(_ -> 4L).toMap
     assert(got == want)
-  }
-
-  // ------------------------------------------------- fused weighted SSSP
-  test("weighted SSSP: 250-round relax drain on a weighted path is exact " +
-      "under the fused loop") {
-    // A 251-node weighted path needs one relax round per hop (the fused
-    // driver's worst case — and its motivation: 2 driver round-trips per
-    // round in the plain loop). Distances are the weight prefix sums.
-    val w = (0 until 250).map(i => 1.0 + (i % 5) * 0.25)
-    val path = (0 until 250).map(i => (i.toLong, i + 1L, w(i)))
-    val got = graft.algo.SSSP
-      .weighted(spark, edgeDF(path), source = 0L, directed = true)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val want = (0 to 250).map(k => k.toLong -> w.take(k).sum).toMap
-    assert(got.size == want.size)
-    for ((k, d) <- want) assert(math.abs(got(k) - d) < 1e-9, s"node $k")
   }
 
   test("kcore region compaction: forced-compact ≡ compaction-disabled on a " +
