@@ -41,7 +41,7 @@ final case class IterResult(state: DataFrame, iterations: Int,
                             history: Vector[IterRecord], resumedFrom: Int)
 
 /** The convergence loop shared by PageRank, connected components, PLP,
-  * weighted SSSP, eigenvector, Katz and personalized PageRank:
+  * weighted SSSP, eigenvector, Katz, personalized PageRank and coreness:
   *
   *   state₀ → step → state₁ → … until `metric(stateᵢ) <= tol` or maxIter.
   *
@@ -172,11 +172,11 @@ object IterationDriver {
     * plus one to read the convergence scalar. Each intermediate hop of a
     * group is lazily local-checkpointed (the plan truncates to a flat
     * `LogicalRDD` immediately; the data materializes and caches when the
-    * enclosing job first computes through it — the kcore sweep-unrolling
-    * mechanism), only the LAST hop is checkpointed eagerly (the group's one
-    * chain job), then all k convergence scalars are read from the cached
-    * states in one cheap second action: k materializations + k metrics
-    * ride two job submissions instead of 2k. `unroll = 1` is the eager
+    * enclosing job first computes through it), only the LAST hop is
+    * checkpointed eagerly (the group's one chain job), then all k
+    * convergence scalars are read from the cached states in one cheap
+    * second action: k materializations + k metrics ride two job
+    * submissions instead of 2k. `unroll = 1` is the eager
     * per-iteration schedule: every state materializes in its own job,
     * followed by its metric read.
     *

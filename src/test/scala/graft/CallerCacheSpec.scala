@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.algo.{AlgebraicDistance, Diameter, EdgeScores, LinkPrediction, SCD}
+import graft.algo.{AlgebraicDistance, Centrality, Diameter, EdgeScores, LinkPrediction, SCD}
 import graft.core.GraphOps
 
 /** An algorithm must not drop a cache its caller holds. Spark's
@@ -72,6 +72,17 @@ class CallerCacheSpec extends SparkTestBase {
     val e = edges
     keepsCallerCaches(Seq(simpleSym(e))) {
       LinkPrediction.katz(spark, e, maxNodeId = 10).count()
+    }
+  }
+
+  test("Centrality.coreDecomposition keeps the caller's edge-table caches") {
+    val e = edges
+    // the symmetrized simple graph, partitioned by each of its join keys
+    val sym = GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(loopFree(e))
+      .select("src", "dst").withColumn("weight", lit(1.0))).select("src", "dst")
+    keepsCallerCaches(Seq(sym.repartition(col("src")),
+        sym.repartition(col("dst")))) {
+      Centrality.coreDecomposition(spark, e).count()
     }
   }
 

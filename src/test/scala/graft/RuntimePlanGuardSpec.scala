@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, MaxBy}
 import org.apache.spark.sql.catalyst.plans.physical.ClusteredDistribution
-import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, QueryExecution, RDDScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -28,12 +28,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    #timestep rows, while a node- or edge-scale single-task window on the
   *    20k-node fixture trips the threshold immediately.
   *
-  * A second test watches the bounded PageRank, PLP and CC runs for a loop
-  * body that re-hashes its loop-invariant edge cache: a shuffle exchange
-  * that reads a cached table through only narrow operators (filter,
-  * project, codegen wrappers). Each of the three partitions its edge cache
-  * on the loop's join key once, before the loop, so such an exchange means
-  * the cache lost its partitioning.
+  * A second test watches the bounded PageRank, PLP and CC runs and a
+  * kcore run for a loop body that re-hashes its loop-invariant edge cache:
+  * a shuffle exchange that reads a cached or checkpointed table through
+  * only narrow operators (filter, project, codegen wrappers). Each of the
+  * four partitions its edge tables on the loop's join keys once, before
+  * the loop, so such an exchange means a table lost its partitioning.
   *
   * The remaining tests pin plan shapes: each PLP sweep runs its label vote
   * once, a checkpoint keeps the partitioning of an aliased key, and
@@ -56,10 +56,13 @@ class RuntimePlanGuardSpec extends SparkTestBase {
     p.metrics.get("numOutputRows").map(_.value)
       .getOrElse(p.children.headOption.map(outputRows).getOrElse(0L))
 
-  /** The cached table `p` reads through narrow operators only, if any. */
-  private def narrowCacheScan(p: SparkPlan): Option[InMemoryTableScanExec] =
+  /** The cached or checkpointed table `p` reads through narrow operators
+    * only, if any.
+    */
+  private def narrowCacheScan(p: SparkPlan): Option[SparkPlan] =
     p match {
       case s: InMemoryTableScanExec => Some(s)
+      case s: RDDScanExec => Some(s)
       case _: FilterExec | _: ProjectExec | _: WholeStageCodegenExec |
            _: InputAdapter | _: ColumnarToRowExec =>
         narrowCacheScan(p.children.head)
@@ -164,6 +167,7 @@ class RuntimePlanGuardSpec extends SparkTestBase {
         .scores.agg(sum("score")).head()
       PLP.run(spark, edges, cfg = PLP.Config(maxIter = 2)).labels.count()
       ConnectedComponents.run(spark, edges).count()
+      Centrality.coreDecomposition(spark, edges).count()
     } finally {
       edges.unpersist(blocking = false)
       nodes.unpersist(blocking = false)

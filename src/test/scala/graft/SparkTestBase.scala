@@ -131,6 +131,30 @@ object Oracles {
     } yield (u, v, w)
   }
 
+  /** Coreness by sequential peeling (Batagelj–Zaveršnik): repeatedly
+    * remove a node of minimum remaining degree; its coreness is the largest
+    * such minimum seen so far. Simple undirected graph: self-loops and
+    * duplicate pairs are dropped, and isolated nodes are absent, as in
+    * `Centrality.coreDecomposition`.
+    */
+  def coreness(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = edges.filter { case (u, v) => u != v }
+      .flatMap { case (u, v) => Seq(u -> v, v -> u) }
+      .groupBy(_._1).map { case (u, es) => u -> es.map(_._2).toSet }
+    val deg = scala.collection.mutable.Map(
+      adj.map { case (u, ns) => u -> ns.size.toLong }.toSeq: _*)
+    val core = scala.collection.mutable.Map.empty[Long, Long]
+    var k = 0L
+    while (deg.nonEmpty) {
+      val (u, d) = deg.minBy(_._2)
+      k = math.max(k, d)
+      core(u) = k
+      deg -= u
+      adj(u).foreach(v => deg.get(v).foreach(dv => deg(v) = dv - 1))
+    }
+    core.toMap
+  }
+
   def perEdgeTriangles(edges: Seq[(Long, Long)]): Map[(Long, Long), Long] = {
     val tris = triangles(edges)
     val simple = edges.filter { case (u, v) => u != v }
