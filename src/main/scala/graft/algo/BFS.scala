@@ -1,10 +1,10 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.GraphOps
-import graft.iterate.{IterConfig, IterationDriver}
+import graft.iterate.{FrontierLoop, IterConfig, IterationDriver}
 
 /** Shortest-path operators (SURVEY.md §2.8): distributed frontier BFS and
   * Bellman-Ford-style weighted SSSP — the Spark counterparts of the
@@ -14,14 +14,15 @@ import graft.iterate.{IterConfig, IterationDriver}
 object SSSP {
 
   /** Multi-source BFS: `sources(id)` → `(source, id, dist)` hop counts for
-    * all reachable nodes. One frontier join per level; all sources advance
-    * in the same jobs (batching amortizes per-iteration overhead — this is
-    * how APSP/diameter-ish workloads should run on Spark, not n separate
-    * BFS jobs).
+    * all reachable nodes. One frontier join per level on
+    * [[graft.iterate.FrontierLoop]]; all sources advance in the same jobs
+    * (batching amortizes per-iteration overhead — this is how
+    * APSP/diameter-ish workloads should run on Spark, not n separate BFS
+    * jobs).
     */
   def bfs(spark: SparkSession, edges: DataFrame, sources: DataFrame,
           directed: Boolean = false, maxDepth: Int = 1000,
-          compactEvery: Int = 8, prebuiltAdj: Boolean = false): DataFrame = {
+          prebuiltAdj: Boolean = false): DataFrame = {
     // `prebuiltAdj`: the caller hands an adjacency table that is ALREADY in
     // traversal orientation (symmetric for undirected graphs), already
     // src-partitioned + sorted + persisted, and owns its lifecycle. Callers
@@ -31,72 +32,18 @@ object SSSP {
     // table) plus a full shuffle + sort + cache build per call.
     val adj =
       if (prebuiltAdj) edges.select("src", "dst")
-      else {
-        val adj0 = if (directed) edges else GraphOps.symmetrize(edges)
-        // src-partitioned once: per-level frontier joins reshuffle only the
-        // frontier, never the cached edge table
-        // sorted within partitions: InMemoryRelation preserves
-        // outputOrdering, so the per-level sort-merge frontier join skips
-        // re-sorting the cached edge side (multi-source frontiers aren't
-        // node-bounded, so these joins stay SMJ — the sort was paid once
-        // per LEVEL otherwise)
-        adj0.select("src", "dst").repartition(col("src"))
-          .sortWithinPartitions("src")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      }
+      else adjacency(edges, directed, col("src"), col("dst"))
 
-    // Frontier-accumulating loop: only the CURRENT level materializes per
-    // sweep; settled levels stay as already-checkpointed leaves and the
-    // visited set used by the dedup anti-join is their plain union. The
-    // alternative — carrying one (source,id,dist,frontier) state table and
-    // rewriting it every level — re-materializes O(reached) rows × O(depth)
-    // times, which dominated multi-source runs (diameter fringe batches).
-    // The leaf list is COMPACTED into one checkpointed `settled` table
-    // every `compactEvery` levels: web-diameter runs (~20 levels) behave as
-    // before, while high-diameter graphs (chains, meshes) keep the per-level
-    // union plan at ≤ compactEvery+1 leaves instead of O(depth) — the
-    // amortized rewrite is O(reached/compactEvery) rows per level.
-    var frontier = sources.select(col("id").as("source"), col("id"),
-      lit(0L).as("dist")).transform(graft.core.Materialize.checkpoint)
-    var settled = frontier // compacted prefix of finished levels
-    val recent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // the live frontier at compaction time: its DATA is merged into
-    // `settled`, but the next level's expansion join still reads the old
-    // checkpoint — freeing it there races the join (observed
-    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), so the free is deferred until the
-    // next frontier has materialized
-    var pendingFree: Option[DataFrame] = None
-    var fSize = frontier.count()
-    var depth = 0
-    while (fSize > 0 && depth < maxDepth) {
-      depth += 1
-      val visited = (settled +: recent.toSeq)
-        .map(_.select("source", "id")).reduce(_ unionByName _)
-      val expanded = adj.join(frontier.select(col("source"),
-          col("id").as("src"), col("dist")), "src")
-        .select(col("source"), col("dst").as("id"), (col("dist") + 1).as("dist"))
-        .groupBy("source", "id").agg(min("dist").as("dist"))
-      frontier = expanded.join(visited, Seq("source", "id"), "left_anti")
-        .transform(graft.core.Materialize.checkpoint)
-      fSize = frontier.count()
-      pendingFree.foreach(graft.core.Materialize.free)
-      pendingFree = None
-      if (fSize > 0) recent += frontier
-      if (recent.length >= compactEvery) {
-        val newSettled = (settled +: recent.toSeq)
-          .map(_.select("source", "id", "dist")).reduce(_ unionByName _)
-          .transform(graft.core.Materialize.checkpoint)
-        graft.core.Materialize.free(settled)
-        recent.dropRight(1).foreach(graft.core.Materialize.free)
-        pendingFree = Some(recent.last)
-        recent.clear()
-        settled = newSettled
-      }
+    val reach = FrontierLoop.run(sources.select(col("id").as("source"),
+        col("id"), lit(0L).as("dist")), Seq("source", "id"), maxDepth) {
+      (frontier, _) =>
+        adj.join(frontier.select(col("source"), col("id").as("src"),
+            col("dist")), "src")
+          .select(col("source"), col("dst").as("id"), (col("dist") + 1).as("dist"))
+          .groupBy("source", "id").agg(min("dist").as("dist"))
     }
     if (!prebuiltAdj) adj.unpersist()
-    pendingFree.foreach(graft.core.Materialize.free)
-    (settled +: recent.toSeq).map(_.select("source", "id", "dist"))
-      .reduce(_ unionByName _)
+    reach.all
   }
 
   /** Weighted SSSP via iterative relaxation (Bellman-Ford / the hash-min
@@ -105,15 +52,26 @@ object SSSP {
     */
   def weighted(spark: SparkSession, edges: DataFrame, source: Long,
                directed: Boolean = false, maxIter: Int = 1000,
-               unroll: Int = IterationDriver.DefaultUnroll): DataFrame = {
-    val adj0 = if (directed) edges else GraphOps.symmetrize(edges)
-    val adj = adj0.repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+               unroll: Int = IterationDriver.DefaultUnroll): DataFrame =
+    relax(spark, edges, directed, col("weight"), maxIter, unroll) { adj =>
+      GraphOps.nodes(adj)
+        .select(col("id"),
+          when(col("id") === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"),
+          (col("id") === source).as("changed"))
+    }
 
-    val init = GraphOps.nodes(adj)
-      .select(col("id"),
-        when(col("id") === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"),
-        (col("id") === source).as("changed"))
+  /** The relax loop of [[weighted]] and [[DynSSSP.insertEdges]], on
+    * `IterationDriver.run`. `init(adj)` is the start state
+    * `(id, dist, changed)` over the traversal adjacency `(src, dst, weight)`
+    * (edge weights from `weight`); each round relaxes the out-edges of the
+    * nodes whose distance changed. Returns `(id, dist)` for the nodes at a
+    * finite distance.
+    */
+  private[algo] def relax(spark: SparkSession, edges: DataFrame,
+                          directed: Boolean, weight: Column, maxIter: Int,
+                          unroll: Int)(init: DataFrame => DataFrame): DataFrame = {
+    val adj = adjacency(edges, directed, col("src"), col("dst"),
+      weight.as("weight"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       val frontier = state.where(col("changed"))
@@ -135,12 +93,27 @@ object SSSP {
     def changedAgg(next: DataFrame): DataFrame =
       next.agg(sum(when(col("changed"), 1L).otherwise(0L)).as("m"))
 
-    val res = IterationDriver.run(spark, init, step, changedAgg,
+    val res = IterationDriver.run(spark, init(adj), step, changedAgg,
       IterConfig(tol = 0.0, maxIter = maxIter), unroll = unroll)
     adj.unpersist()
     res.state.where(!col("dist").isNaN && col("dist") =!= Double.PositiveInfinity)
       .select("id", "dist")
   }
+
+  /** The traversal adjacency of `edges` (symmetrized unless `directed`)
+    * projected to `cols`, persisted; the caller unpersists it after its
+    * loop. src-partitioned once: per-level frontier joins reshuffle only the
+    * frontier, never the cached edge table. Sorted within partitions:
+    * InMemoryRelation preserves outputOrdering, so the per-level sort-merge
+    * frontier join skips re-sorting the cached edge side (multi-source
+    * frontiers aren't node-bounded, so these joins stay SMJ — the sort was
+    * paid once per LEVEL otherwise).
+    */
+  private def adjacency(edges: DataFrame, directed: Boolean,
+                        cols: Column*): DataFrame =
+    (if (directed) edges else GraphOps.symmetrize(edges)).select(cols: _*)
+      .repartition(col("src")).sortWithinPartitions("src")
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Eccentricity of the given sources (max BFS distance), and from it the
     * exact diameter when `sources` = all nodes (`distance/Diameter.cpp`

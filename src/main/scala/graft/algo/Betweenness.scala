@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{GraphOps, Materialize}
+import graft.iterate.{FrontierLoop, Reach}
 
 /** Sampled betweenness centrality — Brandes' algorithm
   * (`centrality/Betweenness.cpp`, sampled variant `ApproxBetweenness2.cpp`:
@@ -26,8 +27,7 @@ object Betweenness {
   def sampled(spark: SparkSession, edges: DataFrame, nSources: Int,
               seed: Long = 42, directed: Boolean = false,
               maxDepth: Int = 100, normalized: Boolean = false): DataFrame = {
-    val nodes = GraphOps.nodes(edges.where(col("src") =!= col("dst"))
-      .select("src", "dst").withColumn("weight", lit(1.0)))
+    val nodes = nonLoopNodes(edges)
     val sources = nodes
       .orderBy(xxhash64(col("id"), lit(seed)), col("id"))
       .limit(nSources)
@@ -43,24 +43,19 @@ object Betweenness {
                  directed: Boolean = false, maxDepth: Int = 100,
                  normalized: Boolean = false,
                  scaleToFullGraph: Boolean = true): DataFrame = {
-    val base = edges.where(col("src") =!= col("dst"))
-    val adj = (if (directed) base.select("src", "dst").distinct()
-      else GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(base))
-        .select("src", "dst"))
-      .transform(Materialize.checkpoint)
-    val nodes = GraphOps.nodes(base.select("src", "dst")
-      .withColumn("weight", lit(1.0)))
+    val adj = brandesAdj(edges, directed)
+    val nodes = nonLoopNodes(edges)
     val n = nodes.count()
     val nSources = sourceIds.count()
     val sources = sourceIds.select(col("id").as("source"))
-    val paths = sigmaBfs(adj, sources, maxDepth)
+    val reach = sigmaBfs(adj, sources, maxDepth)
+    val paths = reach.all
 
     // ---- backward: level-synchronous dependency accumulation ---------
-    val maxLevel = paths.agg(max("dist")).head().getInt(0)
     // delta per (source, id); start all-zero implicitly (left joins)
     var delta = paths.select(col("source"), col("id"), lit(0.0).as("delta"))
       .transform(Materialize.checkpoint)
-    var level = maxLevel
+    var level = reach.depth
     while (level >= 1) {
       val wNodes = paths.where(col("dist") === level)
         .join(delta, Seq("source", "id"))
@@ -74,12 +69,15 @@ object Betweenness {
         .join(vNodes, Seq("source", "v"))
         .groupBy(col("source"), col("v").as("id"))
         .agg(sum(col("sigv") / col("sigw") * (col("deltaw") + 1.0)).as("add"))
-      delta = delta.join(contrib, Seq("source", "id"), "left")
+      val next = delta.join(contrib, Seq("source", "id"), "left")
         .select(col("source"), col("id"),
           (col("delta") + coalesce(col("add"), lit(0.0))).as("delta"))
         .transform(Materialize.checkpoint)
+      Materialize.free(delta)
+      delta = next
       level -= 1
     }
+    reach.free()
 
     val scale0 = if (directed) 1.0 else 2.0
     val sampleScale =
@@ -95,34 +93,22 @@ object Betweenness {
         .as("score"))
   }
 
-  /** Batched level-synchronous BFS with shortest-path counts: returns
-    * `(source, id, dist, sigma)` for every node reached from each source
-    * (Brandes' forward phase; shared by [[forSources]] and
-    * [[riondatoKornaropoulos]]).
+  /** Batched level-synchronous BFS with shortest-path counts on
+    * [[FrontierLoop]]: reaches `(source, id, dist, sigma)` for every node
+    * reached from each source (Brandes' forward phase; shared by
+    * [[forSources]] and [[riondatoKornaropoulos]]).
     */
   private[algo] def sigmaBfs(adj: DataFrame, sources: DataFrame,
-                             maxDepth: Int): DataFrame = {
-    var frontier = sources.select(col("source"), col("source").as("id"),
-      lit(0).as("dist"), lit(1.0).as("sigma"))
-      .transform(Materialize.checkpoint)
-    var paths = frontier
-    var depth = 0
-    while (frontier.take(1).nonEmpty && depth < maxDepth) {
-      depth += 1
-      val expanded = adj
-        .join(frontier.select(col("source"), col("id").as("src"), col("sigma")), "src")
+                             maxDepth: Int): Reach =
+    FrontierLoop.run(sources.select(col("source"), col("source").as("id"),
+        lit(0).as("dist"), lit(1.0).as("sigma")), Seq("source", "id"),
+        maxDepth) { (frontier, depth) =>
+      adj.join(frontier.select(col("source"), col("id").as("src"),
+          col("sigma")), "src")
         .groupBy(col("source"), col("dst").as("id"))
         .agg(sum("sigma").as("sigma"))
-      frontier = expanded
-        .join(paths.select("source", "id"), Seq("source", "id"), "left_anti")
-        .withColumn("dist", lit(depth))
-        .select("source", "id", "dist", "sigma")
-        .transform(Materialize.checkpoint)
-      if (frontier.take(1).nonEmpty)
-        paths = paths.unionByName(frontier).transform(Materialize.checkpoint)
+        .select(col("source"), col("id"), lit(depth).as("dist"), col("sigma"))
     }
-    paths
-  }
 
   /** ApproxBetweenness (`centrality/ApproxBetweenness.cpp` — the
     * Riondato–Kornaropoulos VC-dimension estimator): sample
@@ -148,9 +134,8 @@ object Betweenness {
                             c: Double = 0.5, seed: Long = 42,
                             directed: Boolean = false,
                             maxDepth: Int = 100): DataFrame = {
-    val adj = rkAdj(edges, directed)
-    val nodes = GraphOps.nodes(edges.where(col("src") =!= col("dst"))
-      .select("src", "dst").withColumn("weight", lit(1.0)))
+    val adj = brandesAdj(edges, directed)
+    val nodes = nonLoopNodes(edges)
     val n = nodes.count()
     require(n >= 3, "RK approx betweenness needs at least 3 nodes")
 
@@ -169,7 +154,9 @@ object Betweenness {
       .agg(min(struct(xxhash64(col("id"), lit(seed)).as("h"),
         col("id").as("id"))).as("p"))
       .select(col("p.id").as("source"))
-    val ecc = sigmaBfs(adj, pivots, maxDepth).agg(max("dist")).head().getInt(0)
+    val pivotReach = sigmaBfs(adj, pivots, maxDepth)
+    val ecc = pivotReach.depth
+    pivotReach.free()
     val vd = math.max(2 * ecc + 1, 3)
     val r = math.ceil(c / (eps * eps) *
       (math.floor(math.log(math.max(vd - 2, 1)) / math.log(2)) + 1 +
@@ -186,7 +173,14 @@ object Betweenness {
                            interior: DataFrame, r: Long, seed: Long,
                            directed: Boolean)
 
-  private def rkAdj(edges: DataFrame, directed: Boolean): DataFrame = {
+  /** The nodes of `edges` that have an edge other than a self-loop. */
+  private def nonLoopNodes(edges: DataFrame): DataFrame =
+    GraphOps.nodes(edges.where(col("src") =!= col("dst")))
+
+  /** Brandes' traversal table: distinct non-loop arcs, both ways unless
+    * `directed`, checkpointed.
+    */
+  private def brandesAdj(edges: DataFrame, directed: Boolean): DataFrame = {
     val base = edges.where(col("src") =!= col("dst"))
     (if (directed) base.select("src", "dst").distinct()
      else GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(base))
@@ -200,9 +194,8 @@ object Betweenness {
     */
   def rkInit(spark: SparkSession, edges: DataFrame, r: Long, seed: Long,
              directed: Boolean = false, maxDepth: Int = 100): RkState = {
-    val adj = rkAdj(edges, directed)
-    val nodes = GraphOps.nodes(edges.where(col("src") =!= col("dst"))
-      .select("src", "dst").withColumn("weight", lit(1.0)))
+    val adj = brandesAdj(edges, directed)
+    val nodes = nonLoopNodes(edges)
     val n = nodes.count()
 
     // ---- r deterministic (s,t) pairs: pick by dense node index ----------
@@ -222,8 +215,7 @@ object Betweenness {
     val actualR = pairs.count()
 
     val srcSet = pairs.select(col("s").as("source")).distinct()
-    val paths = sigmaBfs(adj, srcSet, maxDepth)
-      .transform(Materialize.checkpoint)
+    val paths = sigmaBfs(adj, srcSet, maxDepth).all
     val interior = samplePaths(adj, pairs, paths, seed)
     RkState(pairs, paths, interior, actualR, seed, directed)
   }
@@ -233,8 +225,7 @@ object Betweenness {
     */
   def rkScores(spark: SparkSession, edges: DataFrame,
                state: RkState): DataFrame = {
-    val nodes = GraphOps.nodes(edges.where(col("src") =!= col("dst"))
-      .select("src", "dst").withColumn("weight", lit(1.0)))
+    val nodes = nonLoopNodes(edges)
     val counts = state.interior.groupBy("id").agg(count(lit(1)).as("cnt"))
     nodes.join(counts, Seq("id"), "left")
       .select(col("id"),
@@ -262,7 +253,7 @@ object Betweenness {
   def rkInsertEdges(spark: SparkSession, newEdges: DataFrame,
                     inserted: DataFrame, state: RkState,
                     maxDepth: Int = 100): RkState = {
-    val adj = rkAdj(newEdges, state.directed)
+    val adj = brandesAdj(newEdges, state.directed)
     val ins = (if (state.directed)
         inserted.where(col("src") =!= col("dst")).select("src", "dst")
       else GraphOps.symmetrize(GraphOps.canonicalizeUnweighted(
@@ -287,8 +278,9 @@ object Betweenness {
         .transform(Materialize.checkpoint)
       val keepPaths = state.paths
         .join(affSrc, Seq("source"), "left_anti")
-      val newPaths = sigmaBfs(adj,
+      val fresh = sigmaBfs(adj,
         affPairs.select(col("s").as("source")).distinct(), maxDepth)
+      val newPaths = fresh.all
       val paths = keepPaths.unionByName(newPaths)
         .transform(Materialize.checkpoint)
       val keepInterior = state.interior
@@ -296,6 +288,7 @@ object Betweenness {
       val newInterior = samplePaths(adj, affPairs, newPaths, state.seed)
       val interior = keepInterior.unionByName(newInterior)
         .transform(Materialize.checkpoint)
+      fresh.free()
       RkState(state.pairs, paths, interior, state.r, state.seed,
         state.directed)
     }

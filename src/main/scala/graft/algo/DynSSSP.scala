@@ -2,8 +2,8 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import graft.core.{GraphOps, Materialize}
+import graft.core.GraphOps
+import graft.iterate.IterationDriver
 
 /** Dynamic single-source shortest paths (`graph/DynBFS.cpp`,
   * `graph/DynDijkstra.cpp` semantics): repair an existing distance table
@@ -28,17 +28,17 @@ object DynSSSP {
     * `edges` (the post-insertion edge table, weights respected when
     * `weighted`). Nodes previously unreachable enter through the frontier
     * naturally. Returns the repaired `(id, dist)`.
+    *
+    * Runs on weighted SSSP's relax loop ([[SSSP.relax]]) from an init state
+    * of the old distances lowered by the seeded improvements, with +∞ for
+    * every other adjacency node; only the improved nodes start changed.
     */
   def insertEdges(spark: SparkSession, edges: DataFrame, dist: DataFrame,
                   newEdges: DataFrame, weighted: Boolean = false,
                   directed: Boolean = false, maxIter: Int = 1000): DataFrame = {
-    val adjAll = if (directed) edges else GraphOps.symmetrize(edges)
-    val adj = adjAll.select(col("src"), col("dst"),
-      (if (weighted) col("weight") else lit(1.0)).as("weight"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val weight = if (weighted) col("weight") else lit(1.0)
     val newAdj = (if (directed) newEdges else GraphOps.symmetrize(newEdges))
-      .select(col("src"), col("dst"),
-        (if (weighted) col("weight") else lit(1.0)).as("weight"))
+      .select(col("src"), col("dst"), weight.as("weight"))
 
     // initial improvements: new edges whose src has a distance and whose
     // dst either has none or a worse one
@@ -51,33 +51,15 @@ object DynSSSP {
       .groupBy(col("dst").as("id"))
       .agg(min(col("ds") + col("weight")).as("nd"))
 
-    var state = d.join(seeds, Seq("id"), "full")
-      .select(col("id"),
-        least(coalesce(col("dist"), col("nd")),
-          coalesce(col("nd"), col("dist"))).as("dist"),
-        (col("nd").isNotNull &&
-          (col("dist").isNull || col("nd") < col("dist"))).as("changed"))
-      .transform(Materialize.checkpoint)
-
-    var iter = 0
-    var changed = state.where(col("changed")).count()
-    while (changed > 0 && iter < maxIter) {
-      iter += 1
-      val frontier = state.where(col("changed"))
-        .select(col("id").as("src"), col("dist"))
-      val relax = adj.join(frontier, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("dist") + col("weight")).as("prop"))
-      state = state.select("id", "dist").join(relax, Seq("id"), "full")
+    SSSP.relax(spark, edges, directed, weight, maxIter,
+        IterationDriver.DefaultUnroll) { adj =>
+      GraphOps.nodes(adj).join(d, Seq("id"), "full")
+        .join(seeds, Seq("id"), "left")
         .select(col("id"),
-          least(coalesce(col("dist"), col("prop")),
-            coalesce(col("prop"), col("dist"))).as("dist"),
-          (col("prop").isNotNull &&
-            (col("dist").isNull || col("prop") < col("dist"))).as("changed"))
-        .transform(Materialize.checkpoint)
-      changed = state.where(col("changed")).count()
+          coalesce(least(col("dist"), col("nd")), lit(Double.PositiveInfinity))
+            .as("dist"),
+          (col("nd").isNotNull &&
+            (col("dist").isNull || col("nd") < col("dist"))).as("changed"))
     }
-    adj.unpersist()
-    state.select("id", "dist")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{GraphOps, Materialize}
+import graft.iterate.FrontierLoop
 
 /** Maximum s-t flow (`flow/EdmondsKarp.cpp` capability — SURVEY.md §2.8).
   *
@@ -70,18 +71,16 @@ object Flow {
       .repartition(parts, col("id"))
       .transform(Materialize.checkpoint)
 
+    // overflowing nodes other than the terminals
+    def active(st: DataFrame): DataFrame = st.where(col("excess") > 1e-12 &&
+      col("id") =!= source && col("id") =!= sink)
     var round = 0
-    var activeCount = state
-      .where(col("excess") > 1e-12 && col("id") =!= source &&
-        col("id") =!= sink)
-      .count()
+    var activeCount = active(state).count()
     while (activeCount > 0) {
       round += 1
       require(round <= maxRounds,
         s"Flow.maxFlow: not converged after $maxRounds rounds")
-      val act = state
-        .where(col("excess") > 1e-12 && col("id") =!= source &&
-          col("id") =!= sink)
+      val act = active(state)
         .select(col("id").as("u"), col("h").as("hu"), col("excess"))
       // residual out-arcs of active nodes, with the head's height
       val outArcs = arcs.where(col("res") > 0)
@@ -135,10 +134,7 @@ object Flow {
       Materialize.free(outArcs); Materialize.free(pushes)
       arcs = newArcs
       state = newState
-      activeCount = state
-        .where(col("excess") > 1e-12 && col("id") =!= source &&
-          col("id") =!= sink)
-        .count()
+      activeCount = active(state).count()
     }
 
     val flowValue = state.where(col("id") === sink)
@@ -151,21 +147,13 @@ object Flow {
         (col("cap") - col("res")).as("flow"))
       .where(col("flow") > 1e-12)
     // source-side min cut: nodes reachable from source via res > 0
-    var side = state.select(col("id"))
-      .where(col("id") === source)
-      .transform(Materialize.checkpoint)
-    var grew = true
-    while (grew) {
-      val next = side.unionByName(
-          arcs.where(col("res") > 1e-12)
-            .join(side.select(col("id").as("u")), "u")
-            .select(col("v").as("id")))
-        .distinct()
-        .transform(Materialize.checkpoint)
-      grew = next.count() > side.count()
-      Materialize.free(side)
-      side = next
+    val side = FrontierLoop.run(state.select(col("id"))
+        .where(col("id") === source), Seq("id"), Int.MaxValue) {
+      (frontier, _) =>
+        arcs.where(col("res") > 1e-12)
+          .join(frontier.select(col("id").as("u")), "u")
+          .select(col("v").as("id")).distinct()
     }
-    Result(flowValue, flows, side, round)
+    Result(flowValue, flows, side.all, round)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions
 import graft.core.{DenseId, GraphOps, Materialize}
+import graft.iterate.FrontierLoop
 
 /** Strongly connected components of a DIRECTED graph — the capability of the
   * reference's `components/StronglyConnectedComponents.cpp:25-178` (Tarjan,
@@ -239,58 +240,29 @@ object StronglyConnectedComponents {
           .select(col("dst").as("from"), col("src").as("to"))
           .repartition(col("from")) // loop-invariant: partition on join key
           .transform(Materialize.checkpoint)
-        // frontier-accumulating reach: only the current level materializes;
-        // settled levels stay as checkpointed leaves and the dedup anti-join
-        // unions them (same shape as SSSP.bfs — never rewrite visited state).
-        // The frontier carries only `id`: within an equal-color class a
-        // visited node's root IS its color (roots satisfy color(r) = r and
-        // `rev` is color-confined), so the per-level distinct is over one
-        // column and the root attaches once at the end from `colorOf`.
-        // Like SSSP.bfs, the leaf list compacts into one checkpointed table
-        // every 8 levels so high-diameter reach keeps the union plan at ≤9
-        // leaves instead of O(depth).
-        var frontier = roots.transform(Materialize.checkpoint)
-        var settled = frontier
-        val recent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        var pendingFree: Option[DataFrame] = None // see SSSP.bfs: freeing the
-        // just-compacted live frontier races its expansion join
-        var nFound = frontier.count()
-        var fSize = nFound
-        var levels = 1
-        phase(s"reach(outer=$outer)") { while (fSize > 0) {
-          levels += 1
-          val visitedIds = (settled +: recent.toSeq).reduce(_ unionByName _)
-          val expanded = rev.join(frontier.select(col("id").as("from")), "from")
-            .select(col("to").as("id")).distinct()
-          frontier = expanded.join(visitedIds, Seq("id"), "left_anti")
-            .transform(Materialize.checkpoint)
-          fSize = frontier.count()
-          pendingFree.foreach(Materialize.free)
-          pendingFree = None
-          if (fSize > 0) { recent += frontier; nFound += fSize }
-          if (recent.length >= 8) {
-            val newSettled = (settled +: recent.toSeq)
-              .reduce(_ unionByName _).transform(Materialize.checkpoint)
-            Materialize.free(settled)
-            recent.dropRight(1).foreach(Materialize.free)
-            pendingFree = Some(recent.last)
-            recent.clear()
-            settled = newSettled
+        // backward reach on the shared frontier loop. The frontier carries
+        // only `id`: within an equal-color class a visited node's root IS
+        // its color (roots satisfy color(r) = r and `rev` is
+        // color-confined), so the per-level distinct is over one column and
+        // the root attaches once at the end from `colorOf`.
+        val reach = phase(s"reach(outer=$outer)") {
+          FrontierLoop.run(roots, Seq("id"), Int.MaxValue) { (frontier, _) =>
+            rev.join(frontier.select(col("id").as("from")), "from")
+              .select(col("to").as("id")).distinct()
           }
-        } }
-        pendingFree.foreach(Materialize.free)
-        if (verbose) System.err.println(s"[scc] reach levels=$levels found=$nFound")
+        }
+        if (verbose) System.err.println(
+          s"[scc] reach depth=${reach.depth} found=${reach.reached}")
         // a node reaching multiple roots is impossible within equal color:
         // its color equals the single largest root reaching it
-        val visited = (settled +: recent.toSeq).reduce(_ unionByName _)
+        val visited = reach.all
           .join(colorOf, "id")
           .select(col("id"), col("color").as("root"))
           .transform(Materialize.checkpoint)
-        Materialize.free(settled)
-        recent.foreach(Materialize.free)
+        reach.free()
         found += visited
         removeNodes(visited.select("id"))
-        remaining -= nFound
+        remaining -= reach.reached
       }
     }
     eBySrc.unpersist(blocking = false)

@@ -41,9 +41,13 @@ final case class IterResult(state: DataFrame, iterations: Int,
                             history: Vector[IterRecord], resumedFrom: Int)
 
 /** The convergence loop shared by PageRank, connected components, PLP,
-  * weighted SSSP, eigenvector, Katz, personalized PageRank and coreness:
+  * weighted and dynamic SSSP, eigenvector, Katz, personalized PageRank and
+  * coreness:
   *
   *   state₀ → step → state₁ → … until `metric(stateᵢ) <= tol` or maxIter.
+  *
+  * It is for fixpoints that rewrite a whole state each step; traversals
+  * that only add their newest level run on [[FrontierLoop]].
   *
   * Responsibilities: exactly one state generation held at a time, lineage
   * truncation, resumable disk checkpoints (parquet state + JSONL manifest;

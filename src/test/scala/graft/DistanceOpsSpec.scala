@@ -124,6 +124,24 @@ class BetweennessSpec extends SparkTestBase {
         s"node $v: ${got(v)} vs ${bc(v) / 2.0}")
     }
   }
+
+  test("exact betweenness on a chain of 10 diamonds: sigma doubles, depth 20") {
+    val s = spark
+    import s.implicits._
+    // diamond i: hub 3i, middles 3i+1 and 3i+2, next hub 3i+3
+    val und = (0L until 10L).flatMap { i =>
+      val h = 3 * i
+      Seq((h, h + 1), (h, h + 2), (h + 1, h + 3), (h + 2, h + 3))
+    }
+    val got = Betweenness.forSources(spark, edgeDF(undirected(und: _*)),
+        (0L to 30L).toDF("id"), scaleToFullGraph = false)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val want = Oracles.betweenness(und)
+    assert(got.keySet == want.keySet)
+    for ((v, b) <- want)
+      assert(math.abs(got(v) - b) < 1e-9 * math.max(1.0, b),
+        s"node $v: ${got(v)} vs $b")
+  }
 }
 
 class SCDSpec extends SparkTestBase {

@@ -48,6 +48,20 @@ class Round2Spec extends SparkTestBase {
     assert(got.count() == n)
   }
 
+  test("SCC: a second cycle goes through coloring and a reach past one compaction") {
+    val s = spark
+    import s.implicits._
+    // the pivot pre-pass takes the 40-cycle (all degrees tie, min id wins);
+    // the 30-cycle survives the trim, colors to 129 and is extracted by a
+    // backward reach 29 levels deep, past FrontierLoop.CompactEvery
+    val big = (0L until 40L).map(i => (i, (i + 1) % 40))
+    val small = (0L until 30L).map(i => (100 + i, 100 + (i + 1) % 30))
+    val got = StronglyConnectedComponents.run(spark, (big ++ small).toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = (0L until 40L).map(_ -> 0L) ++ (100L until 130L).map(_ -> 1L)
+    assert(got == want.toMap)
+  }
+
   // -------------------------------------------------------------- readers
   test("GML round-trip: writer output re-reads to the same graph") {
     val dir = java.nio.file.Files.createTempDirectory("gmlrt").toString

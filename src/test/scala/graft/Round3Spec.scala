@@ -345,6 +345,26 @@ class Round3Spec extends SparkTestBase {
     assert(repaired(3L) == 1.5)
   }
 
+  test("dynamic SSSP repair across several unroll groups equals fresh SSSP") {
+    // a 30-node weighted path and a shortcut from the source to node 20:
+    // the improvement walks 9 hops each way (to 29 and back to 11), more
+    // relax rounds than IterationDriver.DefaultUnroll composes into a group
+    val base = (0L until 29L).map(i => (i, i + 1, 1.0 + (i % 3)))
+    val dist0 = SSSP.weighted(spark, edgeDF(base), source = 0L)
+    val old = dist0.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val newE = Seq((0L, 20L, 2.5))
+    val all = edgeDF(base ++ newE)
+    val repaired = DynSSSP.insertEdges(spark, all, dist0, edgeDF(newE),
+        weighted = true)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val fresh = SSSP.weighted(spark, all, source = 0L)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(repaired == fresh)
+    assert(repaired(20L) == 2.5)
+    assert((11L to 29L).forall(v => repaired(v) < old(v)) &&
+      repaired(10L) == old(10L))
+  }
+
   // ----------------------------------------------------------- generators
   test("hyperbolic generator: band join equals brute-force n² threshold") {
     val s = spark

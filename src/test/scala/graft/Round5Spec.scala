@@ -104,7 +104,7 @@ class Round5Spec extends SparkTestBase {
     assert(res.count() == 520)
     // on a path from node 0, dist(id) == id
     assert(res.where(col("dist") =!= col("id")).count() == 0)
-    // the returned union is settled + ≤ compactEvery recent leaves, NOT one
+    // the returned union is settled + ≤ CompactEvery recent leaves, NOT one
     // leaf per level — the per-level visited scan stays bounded the same way
     val leaves = res.queryExecution.logical.collectLeaves()
     assert(leaves.size <= 9, s"visited union not compacted: ${leaves.size} leaves")

@@ -336,6 +336,13 @@ class Round6Spec extends SparkTestBase {
       (1L, 3L, 2.0), (2L, 3L, 3.0)), 0L, 3L, 5.0)
   }
 
+  test("maxFlow: source side 12 hops deep") {
+    // capacity 2 along 0..12, a unit bottleneck into the sink 13: the unit
+    // that cannot pass flows back, and the cut side is the whole path
+    checkFlow((0L until 12L).map(i => (i, i + 1, 2.0)) :+ ((12L, 13L, 1.0)),
+      0L, 13L, 1.0)
+  }
+
   test("maxFlow: disconnected sink gives zero") {
     val r = graft.algo.Flow.maxFlow(spark,
       edgeDF(Seq((0L, 1L, 4.0), (2L, 3L, 4.0))), 0L, 3L)

@@ -165,4 +165,34 @@ object Oracles {
       .groupBy(identity).map { case (k, vs) => k -> vs.size.toLong }
     simple.map(e => e -> counts.getOrElse(e, 0L)).toMap
   }
+
+  /** Sequential Brandes over an undirected edge list: unnormalized
+    * betweenness from every node, each undirected pair counted once.
+    */
+  def betweenness(edges: Seq[(Long, Long)]): Map[Long, Double] = {
+    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
+      .map { case (u, es) => u -> es.map(_._2) }
+    val bc = scala.collection.mutable.Map(adj.keys.toSeq.map(_ -> 0.0): _*)
+    for (s <- adj.keys) {
+      val dist = scala.collection.mutable.Map(s -> 0)
+      val sigma = scala.collection.mutable.Map(s -> 1.0)
+      val order = scala.collection.mutable.ArrayBuffer(s)
+      val queue = scala.collection.mutable.Queue(s)
+      while (queue.nonEmpty) {
+        val v = queue.dequeue()
+        for (w <- adj(v)) {
+          if (!dist.contains(w)) {
+            dist(w) = dist(v) + 1; queue.enqueue(w); order += w
+          }
+          if (dist(w) == dist(v) + 1)
+            sigma(w) = sigma.getOrElse(w, 0.0) + sigma(v)
+        }
+      }
+      val delta = scala.collection.mutable.Map(adj.keys.toSeq.map(_ -> 0.0): _*)
+      for (w <- order.reverse; v <- adj(w) if dist(v) == dist(w) - 1)
+        delta(v) += sigma(v) / sigma(w) * (1 + delta(w))
+      for (v <- adj.keys if v != s) bc(v) += delta(v)
+    }
+    bc.map { case (v, b) => v -> b / 2.0 }.toMap
+  }
 }
